@@ -654,8 +654,6 @@ def merge_segments(
     dest: str,
     raw_emb: DataFrame | None = None,
     allow_requantize: bool = False,
-    assign: str = "local",
-    encode: str = "native",
 ) -> dict:
     """Fold segments back into ONE store — the lifecycle CLOSER that
     :func:`search_segments` was missing: after a rebalance the swept
@@ -678,7 +676,7 @@ def merge_segments(
        covering the segment's live ids): the segment's vectors are
        admitted into the base's basis+model from their ORIGINALS —
        :func:`apply_rotation` then the scan-local
-       ``ivf_pq_index(assign="local", residual=True)`` encode, exactly
+       ``ivf_pq_index(residual=True, coarse_rows=…)`` encode, exactly
        a fresh admission, hence bit-identical to having streamed them
        into the base in the first place.  Ids missing from ``raw_emb``
        fail loudly (a vector that cannot be re-encoded must not
@@ -813,10 +811,8 @@ def merge_segments(
                 base.centroid_rows,
                 m=base.m,
                 dim=base.dim,
-                assign=assign,
                 residual=True,
                 coarse_rows=base.coarse_rows,
-                encode=encode,
             ).select(*cols)
             report["reencoded"] += n_ids
         elif allow_requantize and ix.rotation == base.rotation:
@@ -829,10 +825,8 @@ def merge_segments(
                 base.centroid_rows,
                 m=base.m,
                 dim=base.dim,
-                assign=assign,
                 residual=True,
                 coarse_rows=base.coarse_rows,
-                encode=encode,
             ).select(*cols)
             report["requantized"] += part.count()
         else:
@@ -915,7 +909,6 @@ def rebalance_ivfadc(
     threshold: float = 4.0,
     sample_limit: int = 100_000,
     lloyd_iters: int = 3,
-    assign: str = "window",
 ) -> dict:
     """Index MAINTENANCE under corpus drift: streamed admission
     (:func:`~..streaming.ann.ivfadc_index_stream`) assigns new vectors
@@ -934,7 +927,9 @@ def rebalance_ivfadc(
     2. **Re-train** — coarse centroids re-learned on a CAPPED sample
        of the current corpus (:func:`~.similarity.
        farthest_first_seeds` + :func:`~.similarity.kmeans_lite`, the
-       settled production recipe; ``assign="arrow"`` for n_lists ≈ √n).
+       settled production recipe; its assignment kernel follows the
+       :data:`~.similarity.LITERAL_BUDGET` rule, so n_lists ≈ √n
+       quantizers train on the BLAS kernel).
        The sample follows the ``opq_train`` bounded-sample discipline:
        a ceil'd hash-mod prefilter bounds the survivors to
        ~``sample_limit`` rows under ANY corpus size, then a
@@ -1027,7 +1022,6 @@ def rebalance_ivfadc(
             k=n_lists,
             iters=lloyd_iters,
             seeds=similarity.farthest_first_seeds(sample, n_lists),
-            assign=assign,
         )
         new_rows = sorted(
             (int(r["vec_id"]), [int(v) for v in r["q"]])
@@ -1043,7 +1037,6 @@ def rebalance_ivfadc(
             loaded.centroid_rows,
             m=loaded.m,
             dim=loaded.dim,
-            assign="local" if assign == "window" else assign,
             residual=True,
             coarse_rows=new_rows,
         )

@@ -55,13 +55,27 @@ def rule_gate(
     row.  Every consumer is permutation-invariant (``size``,
     ``size∘array_distinct``), so the values, the kept-row set, and the
     output hashes are bit-identical to both prior spellings; the
-    interleaved A/B (tools/ab_curate.py, idle box, noop sink) measured
+    interleaved A/B (OPTIMIZATION_r14.md, idle box, noop sink) measured
     fused 2.97 s / join 3.10 s / this 2.63 s median on the full
     curate_corpus pipeline at sf0.1.  The marker's only optimizer
     effect is local: the gate predicates were never scan-pushable
     (derived columns), and nothing upstream of the gate exists for
     other predicates to push past.
+    The ``F.shuffle`` staging blocks pushdown of later predicates, so
+    composed callers should filter ``docs`` first.
+
+    Raises ``ValueError`` naming the column when ``docs`` already has
+    one of the columns this gate adds (``n_words``, ``uniq_ratio``,
+    ``__toks``) — otherwise the clash surfaces later as an ambiguous
+    reference.
     """
+    added = ("n_words", "uniq_ratio", "__toks")
+    for c in docs.columns:
+        if c.lower() in added:
+            raise ValueError(
+                f"rule_gate adds a column named {c!r}, which docs already"
+                " has — drop or rename it before gating"
+            )
     toks = F.shuffle(tx._tokens(F.col(text)))
     staged = docs.select("*", toks.alias("__toks"))
     n_words_raw = F.size(F.col("__toks"))

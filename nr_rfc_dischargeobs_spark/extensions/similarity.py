@@ -23,6 +23,27 @@ from pyspark.sql import functions as F
 
 QUANT = 100000
 
+# Literal-tree budget (terms).  It comes from the PQ encode / ADC LUT
+# compile wall: an unrolled m·k·dsub tree heap-OOMs janino near 16k terms
+# (the k=256 production codebook), so a codebook past the budget encodes
+# on the Arrow (BLAS) kernel and its probe-side LUTs take one
+# literal-array transform.  Two more choices reuse it, each checked by
+# an interleaved A/B (200k vectors for the index build, 50k for k-means;
+# dim 64, local[4]) in which Arrow won every pair:
+# - a ``coarse_rows`` ivf_pq_index build folds its coarse argmin only
+#   while its whole literal tree (:func:`_fold_build_terms`) fits —
+#   past it, at 4, 16 and 64 lists, the Arrow assignment was faster;
+# - kmeans_lite assigns on Arrow once its ``seeds`` are past it (k·dim;
+#   at k=64 the window ran 36.3 s to Arrow's 4.4 s, median).
+# Every registered geometry (m=4, k=8, 4 lists at dim=64: a 1792-term
+# build) fits, so registered plans stay native.
+LITERAL_BUDGET = 2048
+
+
+def _literal_terms(rows: list[tuple[int, list[int]]]) -> int:
+    """Terms a model of ``(id, vector)`` rows costs as a literal tree."""
+    return sum(len(v) for _, v in rows)
+
 
 def quantized(emb: Column, quant: int = QUANT) -> Column:
     """array<float> → array<bigint> at fixed scale (exact in both worlds)."""
@@ -180,7 +201,6 @@ def lsh_bucketed_topk(
     k: int = 3,
     bits: int = 4,
     probe_hamming: int = 0,
-    dim: int | None = None,
 ) -> DataFrame:
     """ANN top-k: candidates restricted to the query's sign-sketch bucket.
 
@@ -228,7 +248,7 @@ def lsh_bucketed_topk(
         "query_id",
         "neighbor_id",
         cosine(
-            dot(F.col("qv"), F.col("cv"), dim), F.col("qn"), F.col("cn")
+            dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn")
         ).alias("cosine"),
     )
     return _rank_topk(scored, k)
@@ -277,7 +297,6 @@ def ivf_topk(
     centroids: DataFrame,
     k: int = 3,
     nprobe: int = 2,
-    dim: int | None = None,
 ) -> DataFrame:
     """IVF ANN top-k: corpus vectors live in exactly one inverted list;
     each query probes its ``nprobe`` nearest lists and ranks only those
@@ -289,11 +308,7 @@ def ivf_topk(
     tuned by nprobe × number of lists.  Every pair a probe produces is
     unique (one list per corpus vector), so no candidate dedup is needed.
     """
-    # zero-norm exclusion as in brute_force_topk (parity + ANSI safety);
-    # dim is deliberately NOT forwarded into ivf_assign — its scoring
-    # sits in a BroadcastNestedLoopJoin stage where the unrolled dot
-    # runs interpreted and loses ~6× to the HOF fold (see `dot`); the
-    # dial applies only to the codegen-capable list-equality join below
+    # zero-norm exclusion as in brute_force_topk (parity + ANSI safety)
     q = ivf_assign(queries.filter(F.col("n") > 0), centroids, nprobe).select(
         F.col("vec_id").alias("query_id"),
         F.col("q").alias("qv"),
@@ -312,7 +327,7 @@ def ivf_topk(
         "query_id",
         "neighbor_id",
         cosine(
-            dot(F.col("qv"), F.col("cv"), dim), F.col("qn"), F.col("cn")
+            dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn")
         ).alias("cosine"),
     )
     return _rank_topk(scored, k)
@@ -322,7 +337,6 @@ def lsh_neardup_pairs(
     prepared: DataFrame,
     threshold: float = 0.3,
     bits: int = 4,
-    dim: int | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs at corpus scale: candidate pairs are
     restricted to the same sign-sketch bucket (equality self-join on the
@@ -358,7 +372,7 @@ def lsh_neardup_pairs(
             "vec_a",
             "vec_b",
             cosine(
-                dot(F.col("qa"), F.col("qb"), dim), F.col("na"), F.col("nb")
+                dot(F.col("qa"), F.col("qb")), F.col("na"), F.col("nb")
             ).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
@@ -494,9 +508,7 @@ def farthest_first_seeds(
 
 def kmeans_lite(
     prepared: DataFrame, k: int = 8, iters: int = 1,
-    dim: int | None = None,
     seeds: list[tuple[int, list[int]]] | None = None,
-    assign: str = "window",
 ) -> DataFrame:
     """Distributed Lloyd's k-means over quantized embeddings — the coarse
     quantizer trainer for :func:`ivf_topk` (returns a ``prepare``-shaped
@@ -522,25 +534,19 @@ def kmeans_lite(
     lose all members drop out (standard Lloyd's degeneracy; the next
     assignment simply uses fewer lists).
 
-    ``assign="arrow"`` swaps the crossJoin+window assignment for the
-    :func:`ivf_assign_arrow` BLAS kernel — identical assignments (exact
-    int64 distances, same smaller-cid tie-break; pinned in tests), but
-    the |corpus|·k candidate blow-up and the per-vector window sort are
-    replaced by a dense matmul per scan batch.  This is the dial for
-    production list counts (k ≈ √n): at k=1024 the window spelling
-    pushes a billion candidate rows per iteration through a sort; the
-    kernel streams the corpus once.  Centroids are collected to the
-    driver each iteration (k·dim ints — a model parameter; the window
-    path instead chains the uncollected centroid plan, which is the
-    better shape only at toy k).  The mean update stays native either
-    way.
+    The assignment kernel follows :data:`LITERAL_BUDGET`: when
+    ``seeds`` put the model past it (k·dim terms — production list
+    counts, k ≈ √n), each iteration collects the centroids (a model
+    parameter) and assigns with the :func:`ivf_assign_arrow` BLAS kernel,
+    since at k=1024 the window spelling pushes a billion candidate rows
+    per iteration through a sort while the kernel streams the corpus
+    once.  Otherwise the crossJoin+window assignment chains the
+    uncollected centroid plan, the better shape at toy k.  Assignments
+    are identical either way (exact int64 distances, same smaller-cid
+    tie-break; pinned in tests), and the mean update stays native.
     """
     from ..functions import exact
 
-    if assign not in ("window", "arrow", "local"):
-        raise ValueError(
-            f"assign must be 'window', 'arrow' or 'local', got {assign!r}"
-        )
     if seeds is not None:
         if len(seeds) != k:
             # fail loudly: silently training len(seeds) clusters while
@@ -551,6 +557,7 @@ def kmeans_lite(
                 f"k={k} but {len(seeds)} seeds were provided — pass"
                 " k=len(seeds) (seed count IS the cluster count)"
             )
+        arrow = _literal_terms(seeds) > LITERAL_BUDGET
         spark = prepared.sparkSession
         cents = spark.createDataFrame(
             [
@@ -560,6 +567,7 @@ def kmeans_lite(
             "cid long, cq array<bigint>, cn long",
         )
     else:
+        arrow = False
         # "first k" means the k SMALLEST ids (bounded TakeOrdered), not
         # `vec_id < k` — the filter spelling silently produced fewer (or
         # zero) seeds on any id space that isn't 0-based contiguous, and
@@ -574,7 +582,7 @@ def kmeans_lite(
             )
         )
     for _ in range(iters):
-        if assign == "arrow":
+        if arrow:
             cent_rows = [
                 (int(r["cid"]), [int(v) for v in r["cq"]])
                 for r in cents.select("cid", "cq").collect()
@@ -582,27 +590,13 @@ def kmeans_lite(
             assigned = ivf_assign_arrow(prepared, cent_rows, 1).select(
                 "vec_id", "q", F.col("list_id").alias("cid")
             )
-        elif assign == "local":
-            # r13: collect the k centroids (model scale) and fold them
-            # into literal argmin expressions — the corpus assignment
-            # stays in its scan, no crossJoin, no per-vector window
-            # exchange (guide §2.4).  Identical assignments: same exact
-            # int64 distances, same smaller-cid tie-break (the pinned
-            # ivf_assign ≡ ivf_assign_local identity).
-            cent_rows = [
-                (int(r["cid"]), [int(v) for v in r["cq"]])
-                for r in cents.select("cid", "cq").collect()
-            ]
-            assigned = ivf_assign_local(
-                prepared.select("vec_id", "q", "n"), cent_rows
-            ).select("vec_id", "q", F.col("list_id").alias("cid"))
         else:
             scored = prepared.crossJoin(F.broadcast(cents)).select(
                 "vec_id",
                 "q",
                 (
                     F.col("n") + F.col("cn")
-                    - 2 * dot(F.col("q"), F.col("cq"), dim)
+                    - 2 * dot(F.col("q"), F.col("cq"))
                 ).alias("d"),
                 "cid",
             )
@@ -659,9 +653,12 @@ def ivf_assign_arrow(
     expression tree that parses but evaluates interpreted per element.
     The assignment IS a dense int64 matmul (corpus batch × centroid
     matrix) — the same BLAS shape, and the same justification, as
-    :func:`brute_force_topk_arrow`; registered query plans stay native
-    (this kernel serves the training/probe tier and large-list index
-    builds).
+    :func:`brute_force_topk_arrow`.  A ``coarse_rows``
+    :func:`ivf_pq_index` build whose literal-fold stage is past
+    :data:`LITERAL_BUDGET`, and :func:`kmeans_lite` seeds past it (k·dim
+    terms), route here; registered query plans fit the budget and stay
+    native, so this kernel serves the training/probe tier and large-list
+    index builds.
 
     ``with_dist=True`` appends the exact squared-L2 distance ``d`` to
     each emitted (vector, probed-list) row — the seeding loop's cost
@@ -861,8 +858,8 @@ def brute_force_topk_arrow(
     never row-at-a-time, and each batch emits only its partition-local
     top-k per query — |partitions|·|Q|·k rows reach the final merge, not
     |C|·|Q|.  The engine's UDF discipline (PLANS.md) is unchanged: every
-    REGISTERED query plan stays native; this kernel is the opt-in re-rank
-    path for fleet-scale candidate scoring.
+    REGISTERED query plan stays native; this kernel serves fleet-scale
+    candidate scoring and the recall probes.
 
     Zero-norm vectors are excluded on both sides, mirroring
     :func:`brute_force_topk` — without the filter this kernel's numpy
@@ -1871,10 +1868,12 @@ def pq_codes_arrow(
     driver heap — the expression-tree wall, not a data-size wall).  The
     encode is m dense int64 matmuls per batch (corpus-subspace ×
     codebook-subspace) — the same BLAS shape, and the same
-    justification, as :func:`brute_force_topk_arrow`.  Registered query
-    plans keep the native kernel (their k ≤ 16 geometry compiles fine
-    and stays whole-stage); this kernel serves codebook-scale training,
-    probes, and index builds.
+    justification, as :func:`brute_force_topk_arrow`.  Callers never pick
+    it: a codebook past :data:`LITERAL_BUDGET` (m·k·dsub terms) routes
+    :func:`ivf_pq_index` and :func:`pq_train_codebooks` here, so
+    registered query plans (k ≤ 16) keep the native whole-stage kernel
+    and this one serves codebook-scale training, probes, and index
+    builds.
     """
     import numpy as np
 
@@ -1917,6 +1916,32 @@ def pq_codes_arrow(
         + ["sq_err long"]
     )
     return prepared.select(*cols).mapInPandas(encode, schema)
+
+
+def _pq_encoder(centroid_rows: list[tuple[int, list[int]]]):
+    """The PQ encode kernel for a codebook: the literal tree
+    (:func:`pq_codes`) within :data:`LITERAL_BUDGET`, BLAS past it."""
+    if _literal_terms(centroid_rows) > LITERAL_BUDGET:
+        return pq_codes_arrow
+    return pq_codes
+
+
+def _fold_build_terms(
+    coarse_rows: list[tuple[int, list[int]]],
+    centroid_rows: list[tuple[int, list[int]]],
+    residual: bool,
+    native_encode: bool,
+) -> int:
+    """Literal terms a literal-fold :func:`ivf_pq_index` build puts in
+    its scan-local plan: the coarse argmin (n_lists·dim), the residual
+    subtraction and stored norm (the centroids twice more, plus the
+    codebook) and the native encode (the codebook)."""
+    coarse = _literal_terms(coarse_rows)
+    codebook = _literal_terms(centroid_rows)
+    return (
+        coarse * (3 if residual else 1)
+        + codebook * (int(residual) + int(native_encode))
+    )
 
 
 def _pq_check(
@@ -2013,7 +2038,7 @@ def _adc_lut_cols(
     codebook.  ONE implementation shared by :func:`pq_adc_topk` and
     :func:`ivf_pq_topk` so the LUT spelling can never drift between
     them."""
-    if m * len(cents) * dsub > 2048:
+    if m * len(cents) * dsub > LITERAL_BUDGET:
         # large-codebook spelling (k=256 production geometry): the
         # unrolled m·k·dsub-term tree detonates janino past ~16k terms
         # (heap-OOM during whole-stage compile, same wall as the native
@@ -2023,7 +2048,7 @@ def _adc_lut_cols(
         # the LUT projection runs on the METADATA-SCALE probe side
         # (|Q|·nprobe rows), so per-plan compile cost wins over per-row
         # eval cost by orders of magnitude here.  Values identical —
-        # exact int64 either way.  The threshold keeps every k ≤ 16
+        # exact int64 either way.  The budget keeps every k ≤ 16
         # historical plan byte-identical (their unrolled text is part of
         # pinned oracle hashes).
         lut_cols = []
@@ -2251,34 +2276,43 @@ def ivf_pq_index(
     centroid_rows: list[tuple[int, list[int]]],
     m: int = 4,
     dim: int = 64,
-    assign: str = "window",
     residual: bool = False,
     coarse_rows: list[tuple[int, list[int]]] | None = None,
-    encode: str = "native",
 ) -> DataFrame:
     """Build the IVF-PQ INDEX — the stored artifact of production ANN
     (Jégou et al., TPAMI 2011; the FAISS ``IVFx,PQy`` layout): every
-    corpus vector is coarse-assigned to exactly one inverted list
-    (:func:`ivf_assign`, centroids broadcast) and stored as its m-byte
-    PQ code (:func:`pq_codes`, codebook literal-inlined).  Cost shape,
-    stated precisely: with the default ``assign="window"``,
-    :func:`ivf_assign`'s per-vector argmin is a ``row_number`` window
-    partitioned by ``vec_id`` — ONE corpus-keyed exchange of (vec_id,
-    q, n, list, d) candidate rows, paid once per index build.
-    ``assign="local"`` switches to the fully shuffle-free build
-    (:func:`ivf_assign_local`: coarse centroids collected — k rows, a
-    model parameter — and folded into literal argmin expressions),
-    making the whole build scan-local: read the corpus once, write the
-    index, zero exchanges.  Both spellings produce identical
-    assignments (same exact integer distances, same tie-break; pinned
-    in tests) — pick by corpus size: the literal fold wins where the
-    exchange is the bill (A/B at the 1M probe in SCALE_PROBE.json), the
-    window spelling skips the fixed plan/codegen cost at toy scale, and
-    ``assign="arrow"`` (the :func:`ivf_assign_arrow` BLAS kernel) takes
-    over at production list counts (n_lists ≈ √n) where both native
-    spellings degrade — see that function's rationale.
-    Write the result partitioned/bucketed by ``list_id`` and searches
-    scan only probed lists.
+    corpus vector is coarse-assigned to exactly one inverted list and
+    stored as its m-byte PQ code.  Write the result partitioned/bucketed
+    by ``list_id`` and searches scan only probed lists.
+
+    Kernels (every spelling produces identical assignments and codes —
+    same exact integer distances, same smaller-id tie-break; pinned in
+    tests):
+
+    - **encode** — picked by :data:`LITERAL_BUDGET` alone: the codebook
+      (m·k·dsub terms) folds into literal expressions (:func:`pq_codes`)
+      within the budget and runs the BLAS kernel
+      (:func:`pq_codes_arrow`) past it — the k=256 production codebook,
+      whose unrolled tree heap-OOMs janino.
+    - **coarse assignment** — passing ``coarse_rows`` IS a kernel
+      choice, and it is the caller's:
+
+      - only a centroid FRAME: :func:`ivf_assign`'s broadcast join +
+        per-vector ``row_number`` window — ONE corpus-keyed exchange
+        per build, no literal tree.  That exchange is also a barrier:
+        pass only the frame when ``prepared.q`` is a DERIVED expression
+        (a rotated basis), because a literal fold references q once per
+        list and CollapseProject re-inlines q's definition at every
+        reference (no CSE).  A residual build on the frame collects the
+        centroids for the subtraction but keeps the window.
+      - ``coarse_rows`` (q a cheap column — a scan or :func:`prepare`
+        output): the shuffle-free build, zero exchanges.  The literal
+        fold (:func:`ivf_assign_local`) while the build's whole literal
+        tree (:func:`_fold_build_terms`: the argmin, the residual terms,
+        the native encode) fits the budget, else the BLAS assignment
+        (:func:`ivf_assign_arrow`), which measured faster than the fold
+        at every geometry past the budget that was tried (4, 16 and 64
+        lists × 64 dims under an m=16, k=16 residual encode).
 
     ``residual=True`` stores each vector's code over its RESIDUAL
     ``vec − coarse_centroid(list_id)`` instead of the raw vector — the
@@ -2291,59 +2325,35 @@ def ivf_pq_index(
     add the coarse term back); :func:`ivf_pq_topk` reads raw-coded
     indexes only.  The residual subtraction is one ``zip_with`` against
     a literal list_id→centroid map (coarse centroids are a model
-    parameter, k·dim ints) — still scan-local, still zero exchanges in
-    ``assign="local"`` mode.
+    parameter, k·dim ints) — still scan-local, still zero exchanges when
+    ``coarse_rows`` is passed.
 
     Output: (vec_id, list_id, code_0..code_{m-1}, sq_err).
     """
-    if assign not in ("window", "local", "arrow"):
-        # fail loudly: a typo silently falling back to the window
-        # spelling would pay the corpus-keyed exchange the caller
-        # believed they avoided — visible only in the cluster bill
-        raise ValueError(
-            f"assign must be 'window', 'local' or 'arrow', got {assign!r}"
-        )
-    if encode not in ("native", "arrow"):
-        raise ValueError(f"encode must be 'native' or 'arrow', got {encode!r}")
-    # encode dial: native literal tree for registered-plan geometry
-    # (k ≤ 16 — compiles whole-stage), the BLAS kernel for production
-    # k=256 codebooks where the literal tree detonates janino (see
-    # pq_codes_arrow)
-    encoder = pq_codes_arrow if encode == "arrow" else pq_codes
+    encoder = _pq_encoder(centroid_rows)
     # ``coarse_rows`` may be passed directly (the coarse quantizer is a
     # model parameter — a streaming foreachBatch encoder, for one, holds
-    # it as plain data and has no centroid frame to collect from); with
-    # assign="local"/"arrow" it makes ``coarse_centroids`` fully optional
-    if coarse_rows is None and (assign in ("local", "arrow") or residual):
-        if coarse_centroids is None:
-            raise ValueError(
-                "pass coarse_centroids or pre-collected coarse_rows"
-            )
-        coarse_rows = [
-            (r["vec_id"], r["q"])
-            for r in coarse_centroids.select("vec_id", "q").collect()
-        ]
-    if assign == "local":
-        assigned = ivf_assign_local(prepared, coarse_rows)
-    elif assign == "arrow":
-        # the large-list dial (n_lists ≈ √n): the literal fold's
-        # n_lists·dim-term tree evaluates interpreted per element and
-        # the window spelling exchanges |corpus|·n_lists candidates —
-        # the BLAS kernel streams the corpus once (same assignments,
-        # pinned in tests)
-        assigned = ivf_assign_arrow(prepared, coarse_rows, 1)
+    # it as plain data and has no centroid frame to collect from)
+    if coarse_rows is not None:
+        assigned = (
+            ivf_assign_arrow(prepared, coarse_rows, 1)
+            if _fold_build_terms(coarse_rows, centroid_rows, residual,
+                                 encoder is pq_codes) > LITERAL_BUDGET
+            else ivf_assign_local(prepared, coarse_rows)
+        )
+    elif coarse_centroids is None:
+        raise ValueError("pass coarse_centroids or pre-collected coarse_rows")
     else:
-        if coarse_centroids is None:
-            raise ValueError(
-                'the "window" assignment joins against a centroid FRAME'
-                ' — pass coarse_centroids, or use assign="local" with'
-                " coarse_rows"
-            )
         # assignment dot: HOF fold, never unrolled — the coarse
         # assignment is a broadcast CROSS join (BroadcastNestedLoopJoin,
         # no whole-stage codegen), where the fold beats the unrolled
         # tree ~6× (the third side of the dot dial, see :func:`dot`)
         assigned = ivf_assign(prepared, coarse_centroids, 1, None)
+        if residual:
+            coarse_rows = [
+                (r["vec_id"], r["q"])
+                for r in coarse_centroids.select("vec_id", "q").collect()
+            ]
     if residual:
         assigned = residualize(assigned, coarse_rows)
         coded = encoder(
@@ -2425,7 +2435,6 @@ def pq_train_codebooks(
     m: int = 4,
     dim: int = 64,
     iters: int = 1,
-    encode: str = "native",
 ) -> list[tuple[int, list[int]]]:
     """Train the per-subspace PQ codebooks — Lloyd's k-means run
     INDEPENDENTLY in each of the ``m`` subspaces (the training half of
@@ -2456,19 +2465,17 @@ def pq_train_codebooks(
     on a bounded sample at fleet scale — codebook quality saturates far
     below full-corpus coverage (100k–1M rows in practice).
 
-    ``encode="arrow"`` assigns with :func:`pq_codes_arrow` instead of
-    the native literal tree — REQUIRED at the k=256 production
-    geometry, where the unrolled encode detonates codegen (see that
-    function's rationale).  Assignments are identical either way, so
-    the trained integers are too.
+    The assignment encoder follows :func:`ivf_pq_index`'s rule: a
+    codebook past :data:`LITERAL_BUDGET` (k·dim terms — the k=256
+    production geometry, where the unrolled encode detonates codegen)
+    assigns with :func:`pq_codes_arrow` instead of the native literal
+    tree.  Assignments are identical either way, so the trained integers
+    are too.
     """
     from ..functions import exact
 
     if k < 1 or iters < 0:
         raise ValueError(f"need k >= 1 and iters >= 0, got k={k} iters={iters}")
-    if encode not in ("native", "arrow"):
-        raise ValueError(f"encode must be 'native' or 'arrow', got {encode!r}")
-    encoder = pq_codes_arrow if encode == "arrow" else pq_codes
     dsub = dim // m
     seed_rows = sorted(
         residuals.select("vec_id", "q").orderBy(F.col("vec_id").asc())
@@ -2480,6 +2487,7 @@ def pq_train_codebooks(
     codebook = [
         (cid, [int(v) for v in r["q"]]) for cid, r in enumerate(seed_rows)
     ]
+    encoder = _pq_encoder(codebook)
     for _ in range(iters):
         coded = encoder(
             residuals.select("vec_id", "q"), codebook, m=m, dim=dim,
@@ -2928,7 +2936,6 @@ def ivf_pq_topk(
     nprobe: int = 2,
     m: int = 4,
     dim: int = 64,
-    coarse_rows: list[tuple[int, list[int]]] | None = None,
 ) -> DataFrame:
     """IVF-PQ search — the full production ANN shape, composed from the
     audited pieces: each query probes its ``nprobe`` nearest inverted
@@ -2970,23 +2977,13 @@ def ivf_pq_topk(
             " indexes only"
         )
     index = _index_barrier(index, "ivf_pq_topk")
-    # probe-side assignment (r13): when the caller holds the coarse
-    # quantizer as plain data (a model parameter), the per-query top-
-    # nprobe folds into the scan as literal expressions — no broadcast
-    # join, no probe-side exchange + sort + window (guide §2.4); the
-    # frame spelling stays for callers with only a centroid frame.
-    # CAVEAT (measured, r13): pass coarse_rows ONLY when ``queries.q``
-    # is a cheap column/scan expression.  The LUT projection below
-    # references q m·k·dsub more times; without the window's exchange
-    # barrier those references re-inline q's defining expression
-    # (CollapseProject has no CSE), so a derived query frame (e.g. a
-    # rotated basis) detonates the plan — see _ivfadc_scored's note.
+    # probe side: the window assignment, never the literal fold — the
+    # LUT projection below references q m·k·dsub more times, and the
+    # window's exchange is the barrier that keeps those references from
+    # re-inlining a derived query frame's q (CollapseProject has no CSE;
+    # a rotated basis detonates the plan — see _ivfadc_scored's note)
     q = (
-        (
-            ivf_assign_local(queries, coarse_rows, nprobe)
-            if coarse_rows is not None
-            else ivf_assign(queries, coarse_centroids, nprobe, None)
-        )
+        ivf_assign(queries, coarse_centroids, nprobe, None)
         .filter(F.col("n") > 0)
         .selectExpr(
             "vec_id AS query_id", "n AS qn", "list_id",
@@ -3004,7 +3001,6 @@ def ivf_pq_refine(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 3,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Exact re-rank (refine) stage — the final step of the production
     IVF-PQ recipe (Jégou et al., TPAMI 2011 §V; FAISS ``IVFx,PQy``
@@ -3021,20 +3017,17 @@ def ivf_pq_refine(
     (the same contract as :func:`brute_force_topk`).  The scored set is
     |Q|·R rows, so the final top-k window is audit-scale.
 
-    ``kernel="arrow"`` re-scores with the vectorized Arrow kernel (the
-    justified Python node — see :func:`brute_force_topk_arrow`'s BLAS
-    rationale; this is exactly the "opt-in re-rank path" that docstring
-    names).  ``kernel="native"`` spells the same arithmetic as built-in
-    expressions; the two are bit-identical (exact int64 dots, same IEEE
-    division — pinned in tests), which is also what makes the DuckDB
-    oracle exact.  Zero-norm vectors are excluded on both sides like
-    every cosine kernel here.
+    The re-score is built-in expressions (exact int64 dots, the same
+    IEEE division as :func:`brute_force_topk` — which is also what makes
+    the DuckDB oracle exact), with no Python node: a |Q|·R slate is too
+    small for a BLAS kernel to pay for its Arrow transfer (an Arrow
+    scorer measured within run-to-run spread of this one on the
+    registered query at sf0.1).  Zero-norm vectors are excluded on both
+    sides like every cosine kernel here.
 
     Output: (query_id, neighbor_id, rank, cosine) — exact cosine, so a
     refined result is directly comparable to :func:`brute_force_topk`'s.
     """
-    if kernel not in ("arrow", "native"):
-        raise ValueError(f"kernel must be 'arrow' or 'native', got {kernel!r}")
     # distinct: ``candidates`` from ivf_pq_topk is unique by construction,
     # but this is a public API accepting arbitrary frames — a duplicate
     # (query_id, neighbor_id) row would occupy multiple ranks in the final
@@ -3050,64 +3043,19 @@ def ivf_pq_refine(
         )
         .join(F.broadcast(cand), "neighbor_id")
     )
-    if kernel == "native":
-        q = queries.filter(F.col("n") > 0).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("q").alias("qv"),
-            F.col("n").alias("qn"),
-        )
-        scored = gathered.join(F.broadcast(q), "query_id").select(
-            "query_id",
-            "neighbor_id",
-            # HOF fold, not unrolled: candidate slates are bounded
-            # (|Q|·R rows), so plan-build cost dominates (see dot())
-            cosine(
-                dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn")
-            ).alias("cosine"),
-        )
-        return _rank_topk(scored, k)
-
-    import numpy as np
-
-    qrows = queries.filter(F.col("n") > 0).select("vec_id", "q", "n").collect()
-    if not qrows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, cosine double"
-        )
-    qmat = np.array([r.q for r in qrows], dtype=np.int64)  # m × d
-    qnorm = np.sqrt(np.array([r.n for r in qrows], dtype=np.float64))
-    qpos = {int(r.vec_id): i for i, r in enumerate(qrows)}
-
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # candidates whose query was zero-norm (excluded from the
-            # batch) score nothing — same exclusion as the native path
-            idx = pdf["query_id"].map(qpos)
-            keep = idx.notna().to_numpy()
-            if not keep.any():
-                continue
-            idx = idx.to_numpy()[keep].astype(np.int64)
-            qid = pdf["query_id"].to_numpy(dtype=np.int64)[keep]
-            nbr = pdf["neighbor_id"].to_numpy(dtype=np.int64)[keep]
-            cmat = np.array(pdf["cv"].tolist(), dtype=np.int64)[keep]
-            cnorm = np.sqrt(pdf["cn"].to_numpy(dtype=np.float64)[keep])
-            # exact int64 row-wise dots (dim·QUANT² ≪ 2⁶³), then the SAME
-            # division the native kernel plans: double(dot)/(√qn·√cn)
-            dots = np.einsum("ij,ij->i", cmat, qmat[idx]).astype(np.float64)
-            yield pd.DataFrame(
-                {
-                    "query_id": qid,
-                    "neighbor_id": nbr,
-                    "cosine": dots / (qnorm[idx] * cnorm),
-                }
-            )
-
-    scored = gathered.mapInPandas(
-        score, "query_id long, neighbor_id long, cosine double"
+    q = queries.filter(F.col("n") > 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("q").alias("qv"),
+        F.col("n").alias("qn"),
+    )
+    scored = gathered.join(F.broadcast(q), "query_id").select(
+        "query_id",
+        "neighbor_id",
+        # HOF fold, not unrolled: candidate slates are bounded
+        # (|Q|·R rows), so plan-build cost dominates (see dot())
+        cosine(
+            dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn")
+        ).alias("cosine"),
     )
     return _rank_topk(scored, k)
 
@@ -3116,7 +3064,6 @@ def semantic_contamination(
     benchmark: DataFrame,
     corpus: DataFrame,
     threshold: float = 0.3,
-    dim: int | None = None,
 ) -> DataFrame:
     """Embedding-space decontamination screen: for every benchmark (eval)
     vector, how much of the training corpus sits within ``threshold``
@@ -3147,7 +3094,7 @@ def semantic_contamination(
 
     Output: (bench_id, n_contaminated, max_cosine, nearest_id).
     """
-    scored = broadcast_scored_pairs(benchmark, corpus, dim).select(
+    scored = broadcast_scored_pairs(benchmark, corpus).select(
         F.col("query_id").alias("bench_id"), "neighbor_id", "cosine"
     )
     best = F.min(F.struct((-F.col("cosine")).alias("nc"), F.col("neighbor_id")))

@@ -39,8 +39,19 @@ TABLES = (
 # session's entries die with it.
 _PREPARED_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 _SCAN_MEMO: (
-    "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]"
+    "weakref.WeakKeyDictionary[SparkSession,"
+    " dict[tuple[str, str], tuple[tuple[int, int] | None, DataFrame]]]"
 ) = weakref.WeakKeyDictionary()
+
+
+def _stamp(path: str) -> tuple[int, int] | None:
+    """(inode, mtime_ns) of a table path — changes when the table is
+    rewritten in place.  None for paths this process cannot stat."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_ino, st.st_mtime_ns
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -55,21 +66,22 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     microsecond timestamps here — the same nanos→micros truncation DuckDB
     applies, so oracle comparisons agree exactly.
 
-    The returned frame is memoized per (session, sf_dir, table): repeated
-    loads of the same immutable input reuse the analyzed scan plan instead
-    of re-listing the directory and re-inferring the footer schema (the
-    inputs are driver-generated fixtures that never change within a
-    session's lifetime; a table mutated mid-session would need a fresh
-    session — the same contract as Spark's own file-index caching).
+    The returned frame is memoized per (session, normalized sf_dir,
+    table): repeated loads of the same input reuse the analyzed scan plan
+    instead of re-listing the directory and re-inferring the footer
+    schema.  The memo cannot go stale: each hit re-stats the table path,
+    and a table rewritten since it was loaded (its inode or mtime
+    changed) is read afresh.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 
     memo = _SCAN_MEMO.setdefault(spark, {})
-    key = (str(sf_dir), name)
+    key = (os.path.normpath(str(sf_dir)), name)
+    stamp = _stamp(f"{key[0]}/{name}.parquet")
     hit = memo.get(key)
-    if hit is not None:
-        return hit
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
 
     # Self-sufficient on ANY session (the driver passes its own); all are
     # runtime-settable, idempotent SQL confs, applied once per session:
@@ -111,5 +123,5 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # The reference's own data is tz-naive (discharge_obs_pd.py:66-67
             # strips tz), so naive timestamps are the *normal* input here.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    memo[key] = df
+    memo[key] = (stamp, df)
     return df

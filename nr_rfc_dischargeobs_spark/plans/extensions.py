@@ -687,8 +687,8 @@ def sim_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids are what ``ivf_topk`` consumes at scale; training state is
     re-quantized integers, so the oracle reproduces it exactly."""
     prep = similarity.prepare(load(spark, sf_dir, "embeddings"))
-    # r13 A/B: the literal-fold spelling (kmeans_lite(assign="local") +
-    # ivf_assign_local over the corpus) removes the crossJoin+window
+    # r13 A/B: the literal-fold spelling (centroids collected and folded
+    # by ivf_assign_local over the corpus) removes the crossJoin+window
     # exchanges but regenerates a near-64KB codegen method on every
     # bench invocation — measured [1.92, 2.17, 1.82] → [2.96, 3.28,
     # 3.27] s/pass at sf0.1: the compile cost exceeds the exchange it
@@ -3016,13 +3016,13 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compile re-runs on EVERY execution (~5 s fixed, measured — compile
     # failures are not cached).  The cache barrier keeps the encode and
     # the search in separate, compilable stages: 19.9 s → ~3 s at sf0.01.
-    # r13 A/B: the scan-local build (assign="local") composed with the
+    # r13 A/B: the scan-local build (coarse_rows passed) composed with the
     # staged PQ encode exceeds janino's 64KB method limit — the compile
     # FAILS (not cached, ~3-5 s re-attempted every execution, then
     # interpreted fallback): measured [3.2, 2.3, 2.1] s/pass (window)
     # vs [11.5, 10.7, 8.9] (local build).  r14 A/B (VERDICT task 5):
     # splitting assignment and encode across a SECOND persist barrier
-    # (assign="local" + persist of the assigned frame) does give each
+    # (literal-fold build + persist of the assigned frame) does give each
     # stage its own compilable method, but the fold's compile storms
     # recur intermittently across re-executions — measured pass trains
     # [2.6, 2.7, 2.6, 2.1] on one run, then [10.9, 57.9, 2.3, 2.4] and
@@ -3132,16 +3132,15 @@ def sim_ivf_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ search + exact re-rank (refine): the same index/probe
     split as :func:`sim_ivf_pq_topk`, but the ADC search keeps a top-10
     candidate slate per query and :func:`~..extensions.similarity.
-    ivf_pq_refine` re-scores those 10 against their raw vectors with
-    the Arrow kernel — final top-3 by EXACT cosine.  This is the full
+    ivf_pq_refine` re-scores those 10 against their raw vectors —
+    final top-3 by EXACT cosine.  This is the full
     production ANN recipe (coarse probe → ADC scan → exact refine);
     recall lift vs the un-refined search is pinned in
     ``tests/test_similarity.py`` and measured at the 1M-code probe in
     SCALE_PROBE.json.
 
     Same stated plan-build exception as the other PQ plans: the 8-row
-    codebook collect (and the refine kernel's bounded 16-row query-batch
-    collect) run metadata-scale jobs at construction."""
+    codebook collect runs a metadata-scale job at construction."""
     emb = load(spark, sf_dir, "embeddings")
     prep = similarity.prepare(emb)
     cents = [
@@ -3153,7 +3152,7 @@ def sim_ivf_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = prep.filter(F.col("vec_id") >= 28)
     # same load-bearing persist as sim_ivf_pq_topk (janino compile barrier
     # + the stored-artifact posture); released via _PLAN_CACHES.
-    # r13 A/B: assign="local" + literal-fold probe REVERTED here for the
+    # r13 A/B: literal-fold build + literal-fold probe REVERTED here for the
     # same measured janino 64KB blowout as sim_ivf_pq_topk (bench pass
     # times [3.13, 2.98, 3.08] → [4.29, 3.94, 4.80] with the fold; the
     # failed compile re-runs every execution).  r14 A/B: the split-
@@ -3167,7 +3166,7 @@ def sim_ivf_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = similarity.ivf_pq_topk(
         queries, index, coarse, cents, k=10, nprobe=2, m=4, dim=64
     )
-    return similarity.ivf_pq_refine(cand, queries, corpus, k=3, kernel="arrow")
+    return similarity.ivf_pq_refine(cand, queries, corpus, k=3)
 
 
 SIM_IVF_PQ_REFINED_SQL = _IVF_PQ_CTES.rstrip() + """, cand AS (
@@ -3279,7 +3278,7 @@ def sim_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inside the persist materialization (guide §2.4)
     index = similarity.ivf_pq_index(
         corpus, coarse, cb, m=4, dim=64, residual=True,
-        assign="local", coarse_rows=coarse_rows,
+        coarse_rows=coarse_rows,
     ).persist()
     _PLAN_CACHES.append(index)
     return similarity.ivfadc_topk(
@@ -3447,7 +3446,7 @@ def _ensure_base_store(spark: SparkSession, sf_dir: str) -> str:
             ann_store.save_ivfadc(
                 similarity.ivf_pq_index(
                     corpus, coarse, cb, m=4, dim=64, residual=True,
-                    assign="local", coarse_rows=coarse_rows,
+                    coarse_rows=coarse_rows,
                 ),
                 path, coarse_rows, cb, m=4, dim=64,
             )
@@ -3738,7 +3737,7 @@ def _ensure_deleted_store(spark: SparkSession, sf_dir: str) -> str:
                 ann_store.save_ivfadc(
                     similarity.ivf_pq_index(
                         corpus, coarse, cb, m=4, dim=64, residual=True,
-                        assign="local", coarse_rows=coarse_rows,
+                        coarse_rows=coarse_rows,
                     ),
                     path, coarse_rows, cb, m=4, dim=64,
                 )
@@ -3927,15 +3926,12 @@ def _ensure_segment_store(spark: SparkSession, sf_dir: str, seg: str) -> str:
                     spark, sf_dir, seg
                 )
                 ann_store.save_ivfadc(
-                    # "local" only in the raw basis (seg a) — see
-                    # _ivfadc_seg_parts for the rotated-basis rationale
+                    # literal-fold assignment only in the raw basis (seg
+                    # a) — see _ivfadc_seg_parts for the rotated-basis
+                    # rationale
                     similarity.ivf_pq_index(
                         corpus, coarse, cb, m=4, dim=64, residual=True,
-                        **(
-                            {"assign": "local", "coarse_rows": coarse_rows}
-                            if rotation is None
-                            else {}
-                        ),
+                        coarse_rows=coarse_rows if rotation is None else None,
                     ),
                     path, coarse_rows, cb, m=4, dim=64, rotation=rotation,
                 )
@@ -4074,7 +4070,7 @@ def _ensure_merged_store(spark: SparkSession, sf_dir: str) -> str:
                 ann_store.save_ivfadc(
                     similarity.ivf_pq_index(
                         even, coarse, cb, m=4, dim=64, residual=True,
-                        assign="local", coarse_rows=coarse_rows,
+                        coarse_rows=coarse_rows,
                     ),
                     base_p, coarse_rows, cb, m=4, dim=64,
                 )
@@ -4082,7 +4078,7 @@ def _ensure_merged_store(spark: SparkSession, sf_dir: str) -> str:
                 ann_store.save_ivfadc(
                     similarity.ivf_pq_index(
                         fresh_rows, coarse, cb, m=4, dim=64, residual=True,
-                        assign="local", coarse_rows=coarse_rows,
+                        coarse_rows=coarse_rows,
                     ),
                     fresh_p, coarse_rows, cb, m=4, dim=64,
                 )
@@ -4138,7 +4134,7 @@ def _ensure_maintained_store(spark: SparkSession, sf_dir: str) -> str:
                 ann_store.save_ivfadc(
                     similarity.ivf_pq_index(
                         corpus, coarse, cb, m=4, dim=64, residual=True,
-                        assign="local", coarse_rows=coarse_rows,
+                        coarse_rows=coarse_rows,
                     ),
                     path, coarse_rows, cb, m=4, dim=64,
                 )

@@ -3,8 +3,8 @@ persistent IVFADC store, micro-batch by micro-batch.
 
 The whole encode pipeline — coarse assignment (literal-folded argmin),
 residual subtraction, PQ coding, stored reconstruction norm — is
-scan-local narrow expressions (``ivf_pq_index(assign="local",
-residual=True)``), so it streams without any stateful operator: each
+scan-local narrow expressions (``ivf_pq_index(residual=True,
+coarse_rows=…)``), so it streams without any stateful operator: each
 micro-batch is one map-only pass.  The codebooks ride as plain Python
 data (model parameters, exactly the batch posture).
 
@@ -48,7 +48,7 @@ def ivfadc_index_stream(
 ):
     """Maintain a persistent IVFADC index over a streaming frame of
     ``(vec_id, embedding)`` rows.  Each micro-batch encodes scan-locally
-    (zero exchanges — the ``assign="local"`` build) and lands under
+    (zero exchanges — the ``coarse_rows`` build) and lands under
     ``batch_id=N/list_id=K/``; replays overwrite their own batch path
     (structural idempotence, see module docstring).
 
@@ -108,7 +108,7 @@ def ivfadc_index_stream(
         (
             similarity.ivf_pq_index(
                 prep, None, centroid_rows, m=m, dim=dim,
-                assign="local", residual=True, coarse_rows=coarse_rows,
+                residual=True, coarse_rows=coarse_rows,
             )
             .write.partitionBy("list_id")
             .mode("overwrite")

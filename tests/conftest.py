@@ -105,7 +105,6 @@ _SLOW_TESTS = {
     # test_round4_ops.py
     "test_curate_corpus_optional_gates",
     "test_decontam_bloom_oracle_parity_on_degenerate_docs",
-    "test_ivf_pq_refine_arrow_native_bit_parity",
     "test_ivf_pq_refine_full_slate_equals_brute_force",
     "test_ivf_pq_refine_lifts_recall",
     # test_sqlfn.py

@@ -366,7 +366,7 @@ def test_streamed_rotated_admission_matches_batch_build(spark, tmp_path):
     batch = {
         r["vec_id"]: (r["list_id"], r["code_0"], r["code_1"], r["rn"])
         for r in similarity.ivf_pq_index(
-            rotated, None, cb, m=2, dim=4, assign="local",
+            rotated, None, cb, m=2, dim=4,
             residual=True, coarse_rows=coarse_rows,
         ).collect()
     }
@@ -410,7 +410,7 @@ def test_rebalance_preserves_rotation(spark, tmp_path):
     path = str(tmp_path / "rotidx")
     ann_store.save_ivfadc(
         similarity.ivf_pq_index(
-            basis, None, cb, m=2, dim=4, assign="local",
+            basis, None, cb, m=2, dim=4,
             residual=True, coarse_rows=coarse_rows,
         ),
         path, coarse_rows, cb, m=2, dim=4, rotation=rot,
@@ -624,8 +624,7 @@ def test_search_segments_refuses_mixed_geometry_and_empty(spark, tmp_path):
     p8 = str(tmp_path / "m2d8")
     ann_store.save_ivfadc(
         similarity.ivf_pq_index(prep8, None, cb8, m=2, dim=8,
-                                residual=True, coarse_rows=stale,
-                                assign="local"),
+                                residual=True, coarse_rows=stale),
         p8, stale, cb8, m=2, dim=8,
     )
     with pytest.raises(ValueError, match="disagree on \\(m, dim\\)"):
@@ -960,7 +959,7 @@ def test_merge_segments_requantize_and_refusals(spark, tmp_path):
         spark.read.parquet(fresh), ocoarse_rows, ocb, m=4, dim=64
     )
     want_part = similarity.ivf_pq_index(
-        recon, None, cb, m=4, dim=64, assign="local", residual=True,
+        recon, None, cb, m=4, dim=64, residual=True,
         coarse_rows=coarse_rows,
     )
     cols = ["vec_id", "code_0", "code_1", "code_2", "code_3", "rn",
@@ -1007,8 +1006,7 @@ def test_merge_segments_requantize_and_refusals(spark, tmp_path):
     tiny = str(tmp_path / "tiny")
     ann_store.save_ivfadc(
         similarity.ivf_pq_index(mprep, None, mcb, m=2, dim=4,
-                                residual=True, coarse_rows=mrows,
-                                assign="local"),
+                                residual=True, coarse_rows=mrows),
         tiny, mrows, mcb, m=2, dim=4,
     )
     with pytest.raises(ValueError, match="disagree on"):
@@ -1172,7 +1170,7 @@ def test_rebalance_purges_tombstones_and_caps_sample(spark, tmp_path):
     path = str(tmp_path / "drifted")
     ann_store.save_ivfadc(
         S.ivf_pq_index(prep, None, cb, m=2, dim=8, residual=True,
-                       coarse_rows=stale, assign="local"),
+                       coarse_rows=stale),
         path, stale, cb, m=2, dim=8,
     )
     assert ann_store.delete_vectors(spark, path, "vec_id >= 190") == 10

@@ -12,11 +12,20 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from conftest import SF_SMOKE
 from nr_rfc_dischargeobs_spark.extensions import similarity
 
 
 def _emb(spark, rows):
     return spark.createDataFrame(rows, ["vec_id", "embedding"])
+
+
+def _formatted(df) -> str:
+    return df._jdf.queryExecution().explainString(
+        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
 
 
 def _clustered(spark, n: int, k: int = 8, dim: int = 16, noise: float = 0.25):
@@ -477,24 +486,25 @@ def test_ivf_assign_arrow_with_dist_is_exact(spark):
     assert rows[(1, 5)] == 2 * 100_000 * 100_000
 
 
-def test_kmeans_lite_arrow_assignment_matches_window(spark):
-    """assign='arrow' must train the IDENTICAL centroids as the window
+def test_kmeans_lite_arrow_assignment_matches_window(spark, monkeypatch):
+    """Seeds past the literal budget switch kmeans_lite to the Arrow
+    assignment, which must train the IDENTICAL centroids as the window
     spelling — integer state, exact distances, same tie-breaks."""
     prep = similarity.prepare(_clustered(spark, 400, k=4, dim=16))
+    first4 = [
+        (int(r["vec_id"]), [int(v) for v in r["q"]])
+        for r in prep.orderBy("vec_id").limit(4).collect()
+    ]
     want = sorted(map(tuple, similarity.kmeans_lite(
         prep, k=4, iters=3
     ).collect()))
-    got = sorted(map(tuple, similarity.kmeans_lite(
-        prep, k=4, iters=3, assign="arrow"
-    ).collect()))
-    assert got == want
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="arrow"):
-        similarity.kmeans_lite(prep, k=4, assign="blas")
+    monkeypatch.setattr(similarity, "LITERAL_BUDGET", 0)
+    arrow = similarity.kmeans_lite(prep, k=4, iters=3, seeds=first4)
+    assert "MapInPandas" in _formatted(arrow)
+    assert sorted(map(tuple, arrow.collect())) == want
 
 
-def test_ivf_pq_index_arrow_assignment_matches_window(spark):
+def test_ivf_pq_index_arrow_assignment_matches_window(spark, monkeypatch):
     emb = similarity.prepare(
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     )
@@ -507,17 +517,65 @@ def test_ivf_pq_index_arrow_assignment_matches_window(spark):
     want = sorted(map(tuple, similarity.ivf_pq_index(
         corpus, coarse, cents, residual=True
     ).collect()))
-    got = sorted(map(tuple, similarity.ivf_pq_index(
-        corpus, None, cents, residual=True, assign="arrow",
-        coarse_rows=[
-            (int(r["vec_id"]), [int(v) for v in r["q"]])
-            for r in coarse.collect()
-        ],
-    ).collect()))
-    assert got == want
+    coarse_rows = [
+        (int(r["vec_id"]), [int(v) for v in r["q"]])
+        for r in coarse.collect()
+    ]
+    # past the literal budget the coarse_rows build assigns (and encodes)
+    # on the Arrow kernels; the frame-only build keeps the window
+    # assignment and encodes on Arrow
+    monkeypatch.setattr(similarity, "LITERAL_BUDGET", 0)
+    for arrow in (
+        similarity.ivf_pq_index(
+            corpus, None, cents, residual=True, coarse_rows=coarse_rows,
+        ),
+        similarity.ivf_pq_index(corpus, coarse, cents, residual=True),
+    ):
+        assert "MapInPandas" in _formatted(arrow)
+        assert sorted(map(tuple, arrow.collect())) == want
 
 
-def test_kmeans_parallel_seeds_deterministic_and_covering(spark):
+def test_registered_geometry_stays_native(spark):
+    """At the registered geometry (m=4, k=8, 4 coarse lists at dim=64)
+    the literal budget keeps every kernel native: the index builds (both
+    coarse spellings), the codebook trainer's encoder and the refine plan
+    carry no Python node."""
+    py_nodes = ("MapInPandas", "ArrowEvalPython")
+    emb = similarity.prepare(
+        spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    )
+    cents = [
+        (int(r["vec_id"]), [int(v) for v in r["q"]])
+        for r in emb.filter(F.col("vec_id") < 8).orderBy("vec_id").collect()
+    ]
+    coarse = emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 12))
+    coarse_rows = [
+        (int(r["vec_id"]), [int(v) for v in r["q"]])
+        for r in coarse.collect()
+    ]
+    queries = emb.filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
+    corpus = emb.filter(F.col("vec_id") >= 28)
+    assert similarity._pq_encoder(cents) is similarity.pq_codes
+    builds = [
+        similarity.ivf_pq_index(
+            corpus, None, cents, m=4, dim=64, residual=True,
+            coarse_rows=coarse_rows,
+        ),
+        similarity.ivf_pq_index(corpus, coarse, cents, m=4, dim=64),
+    ]
+    plans = [_formatted(df) for df in builds]
+    raw = builds[1].persist()
+    plans.append(_formatted(similarity.ivf_pq_refine(
+        similarity.ivf_pq_topk(
+            queries, raw, coarse, cents, k=10, nprobe=2, m=4, dim=64
+        ),
+        queries, corpus, k=3,
+    )))
+    raw.unpersist()
+    assert not any(node in p for p in plans for node in py_nodes)
+
+
+def test_kmeans_parallel_seeds_deterministic_and_covering(spark, monkeypatch):
     """k-means|| on well-separated planted clusters: deterministic
     (hash coin, no rand), exactly k integer seeds, and the seeds cover
     every true cluster (the Gonzalez coverage property transferred to
@@ -538,10 +596,10 @@ def test_kmeans_parallel_seeds_deterministic_and_covering(spark):
     ).collect()
     assert len(purity) == k
     assert all(r["nc"] == 1 for r in purity)
-    # seeds feed kmeans_lite directly
-    trained = similarity.kmeans_lite(
-        prep, k=k, iters=2, seeds=seeds, assign="arrow"
-    )
+    # seeds feed kmeans_lite directly (on the Arrow assignment, as a
+    # production-size seed set would)
+    monkeypatch.setattr(similarity, "LITERAL_BUDGET", 0)
+    trained = similarity.kmeans_lite(prep, k=k, iters=2, seeds=seeds)
     assert trained.count() == k
     prep.unpersist()
 
@@ -599,28 +657,25 @@ def test_pq_codes_arrow_matches_native(spark):
     assert got_q == want_q
 
 
-def test_pq_train_arrow_encode_matches_native(spark):
+def test_pq_train_arrow_encode_matches_native(spark, monkeypatch):
+    """A codebook past the literal budget trains on the Arrow encoder;
+    assignments, hence the trained integers, match the native kernel."""
     emb = similarity.prepare(
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     ).select("vec_id", "q")
     want = similarity.pq_train_codebooks(emb, k=8, m=4, dim=64, iters=2)
-    got = similarity.pq_train_codebooks(
-        emb, k=8, m=4, dim=64, iters=2, encode="arrow"
-    )
+    monkeypatch.setattr(similarity, "LITERAL_BUDGET", 0)
+    got = similarity.pq_train_codebooks(emb, k=8, m=4, dim=64, iters=2)
     assert got == want
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="encode"):
-        similarity.pq_train_codebooks(emb, k=8, encode="blas")
 
 
 def test_adc_lut_hof_spelling_exact(spark):
-    """Above the size threshold _adc_lut_cols switches to the
+    """Above the literal budget _adc_lut_cols switches to the
     transform-over-literal-codebook spelling; every LUT entry must be
     the exact integer subspace dot product."""
     import numpy as np
 
-    m, dsub, k = 8, 8, 40  # m·k·dsub = 2560 > 2048 → HOF spelling
+    m, dsub, k = 8, 8, 40  # m·k·dsub = 2560 > LITERAL_BUDGET → HOF
     dim = m * dsub
     cents = [
         (c, [(c * 31 + j * 7) % 201 - 100 for j in range(dim)])
@@ -645,14 +700,14 @@ def test_adc_lut_hof_spelling_exact(spark):
             for _, cq in cents
         ]
         assert got == want, s
-    # below the threshold the unrolled spelling (pinned oracle text)
+    # below the budget the unrolled spelling (pinned oracle text)
     small = similarity._adc_lut_cols(cents[:4], m, dsub)
     assert all("transform(" not in t for t in small)
 
 
 def test_ivfadc_k256_geometry_full_probe_identity(spark):
     """The full-probe ≡ brute-force-over-decode identity must hold at
-    the PRODUCTION codebook geometry (k > threshold → arrow encode +
+    the PRODUCTION codebook geometry (past the budget → arrow encode +
     HOF LUT spelling) — the end-to-end pin for the k=256 tier."""
     prep = similarity.prepare(
         _clustered(spark, 1200, k=8, dim=32, noise=0.2)
@@ -669,14 +724,17 @@ def test_ivfadc_k256_geometry_full_probe_identity(spark):
     residuals = similarity.residualize(
         similarity.ivf_assign_arrow(corpus, coarse_rows, 1), coarse_rows
     )
-    # m=8, dsub=4, k=80: m·k·dsub = 2560 > 2048 → the large-k code path
+    # m=8, dsub=4, k=80: m·k·dsub = 2560 > LITERAL_BUDGET → the
+    # large-k code path, picked by the geometry alone
     cb = similarity.pq_train_codebooks(
-        residuals, k=80, m=8, dim=32, iters=1, encode="arrow"
+        residuals, k=80, m=8, dim=32, iters=1
     )
     index = similarity.ivf_pq_index(
         corpus, None, cb, m=8, dim=32, residual=True,
-        assign="arrow", coarse_rows=coarse_rows, encode="arrow",
-    ).persist()
+        coarse_rows=coarse_rows,
+    )
+    assert "MapInPandas" in _formatted(index)  # the Arrow encode
+    index = index.persist()
     got = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine_adc"])
         for r in similarity.ivfadc_topk(

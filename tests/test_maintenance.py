@@ -298,7 +298,7 @@ def test_rebalance_ivfadc_noop_trigger_and_repair(spark, tmp_path):
     res = S.residualize(S.ivf_assign_local(prep, stale), stale)
     cb = S.pq_train_codebooks(res, k=4, m=2, dim=8, iters=1)
     idx = S.ivf_pq_index(prep, None, cb, m=2, dim=8, residual=True,
-                         coarse_rows=stale, assign="local")
+                         coarse_rows=stale)
     path = str(tmp_path / "drifted")
     ann_store.save_ivfadc(idx, path, stale, cb, m=2, dim=8)
 

@@ -59,10 +59,7 @@ def test_no_python_eval_outside_the_recurrence(spark):
     """Every plan except the STATED Python kernels must stay fully
     JVM-side — no Arrow/Batch Python eval nodes.  The whitelist is the
     audited list (PLANS.md): the A2 recurrence (output depends on prior
-    output), the gated multimodal decode, the IVF-PQ refine stage's
-    Arrow re-rank kernel (dense int64 matmul — the BLAS shape; its
-    native-expression twin is pinned bit-identical, so the Python node
-    is a measured choice, not a semantic one), the round-12/13 real
+    output), the gated multimodal decode, the round-12/13 real
     PNG decode, and the round-13 JPEG header walk (codec work —
     generation + inflate/filter-reversal/marker parsing are inherently
     imperative byte work, the tier's raison d'être)."""
@@ -71,7 +68,6 @@ def test_no_python_eval_outside_the_recurrence(spark):
     allowed = {
         "a2_rising_falling_recurrence",
         "ext_mm_decode_features",
-        "ext_sim_ivf_pq_refined",
         "ext_mm_decode_png",
         "ext_mm_decode_png_wide",  # r13: same fixture-gen + decode pair
         "ext_mm_jpeg_headers",  # r13: fixture-gen + marker-walk pair

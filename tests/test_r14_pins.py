@@ -238,3 +238,48 @@ def test_curate_rule_gate_matches_quality_scores(corpus):
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, ref.collect())
     )
+
+
+@pytest.mark.parametrize("clash", ["n_words", "uniq_ratio", "__toks", "N_Words"])
+def test_rule_gate_rejects_clashing_column(corpus, clash):
+    """A docs column named like one rule_gate adds fails up front, with
+    the clashing name in the message, instead of as a later ambiguous
+    reference."""
+    from nr_rfc_dischargeobs_spark.extensions import curate
+
+    docs = corpus.withColumn(clash, F.lit(1))
+    with pytest.raises(ValueError, match=clash):
+        curate.rule_gate(docs, min_words=3)
+
+
+def test_rule_gate_staging_column_never_escapes(corpus):
+    """The __toks staging column is internal to the gate: neither
+    rule_gate nor curate_corpus outputs it."""
+    from nr_rfc_dischargeobs_spark.extensions import curate
+
+    gated = curate.rule_gate(corpus, min_words=3, max_words=100, min_uniq=0.2)
+    assert "__toks" not in gated.columns
+    assert gated.columns == [*corpus.columns, "n_words", "uniq_ratio"]
+    kept = curate.curate_corpus(corpus, min_words=3)
+    assert "__toks" not in kept.columns
+    assert kept.count() > 0
+
+
+def test_load_scan_memo_normalizes_dir_and_tracks_rewrites(spark, tmp_path):
+    """plans.load memoizes one scan per normalized directory, and a table
+    rewritten in place is read afresh instead of served stale."""
+    from nr_rfc_dischargeobs_spark.plans import load
+
+    d = str(tmp_path / "tables")
+    table = f"{d}/t.parquet"
+    spark.range(3).write.parquet(table)
+    first = load(spark, d, "t")
+    assert load(spark, d + "/", "t") is first
+    assert load(spark, d + "/.", "t") is first
+    assert first.count() == 3
+
+    spark.range(5).write.mode("overwrite").parquet(table)
+    fresh = load(spark, d + "/", "t")
+    assert fresh is not first
+    assert fresh.count() == 5
+    assert load(spark, d, "t") is fresh

@@ -634,8 +634,8 @@ def test_ivf_pq_probes_restrict_candidates(spark):
 
 
 def test_ivf_pq_local_assign_is_identical_to_window_assign(spark):
-    """The shuffle-free index build (assign='local': coarse centroids
-    folded into literal argmin expressions) must produce the SAME index
+    """The shuffle-free index build (``coarse_rows`` passed: coarse
+    centroids folded into literal argmin expressions) must produce the SAME index
     as the window spelling — identical exact distances, identical
     smaller-list-id tie-break — including on an exact tie (zero vector
     vs two equal-norm centroids) and across the full random fixture."""
@@ -687,14 +687,14 @@ def test_ivf_pq_local_assign_is_identical_to_window_assign(spark):
         map(
             tuple,
             ivf_pq_index(
-                corpus, coarse, cents, m=2, dim=4, assign="local"
+                corpus, coarse, cents, m=2, dim=4, coarse_rows=coarse_rows
             ).collect(),
         )
     )
     assert a == b
     # the local plan is exchange-free: scan → projections, no shuffle
     plan = (
-        ivf_pq_index(corpus, coarse, cents, m=2, dim=4, assign="local")
+        ivf_pq_index(corpus, coarse, cents, m=2, dim=4, coarse_rows=coarse_rows)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -2258,21 +2258,6 @@ def test_hll_global_audit_and_null_keys(spark):
     assert row["hll_registers_used"] == no_nulls["hll_registers_used"]
 
 
-def test_ivf_pq_index_assign_validation(spark):
-    from nr_rfc_dischargeobs_spark.extensions import similarity
-
-    emb = similarity.prepare(
-        spark.createDataFrame(
-            [(i, [float(i), 1.0]) for i in range(4)],
-            "vec_id long, embedding array<float>",
-        )
-    )
-    with pytest.raises(ValueError, match="assign must"):
-        similarity.ivf_pq_index(
-            emb, emb.limit(2), [(0, [1, 1])], assign="locla"
-        )
-
-
 def test_ann_paths_exclude_zero_norm_like_exact(spark):
     """Review regression: the LSH and IVF top-k paths must apply the
     same zero-norm exclusion as the exact kernel — an all-zero vector
@@ -2467,40 +2452,6 @@ def _refine_fixture(spark, n=60, dim=4, seed=13):
     return prep, cents, coarse, queries, corpus
 
 
-def test_ivf_pq_refine_arrow_native_bit_parity(spark):
-    """The Arrow refine kernel and the native-expression spelling must be
-    BIT-identical — exact int64 dots, same IEEE division — on the same
-    candidate slate (this parity is also what licenses the DuckDB oracle
-    for the registered arrow-kernel query)."""
-    from nr_rfc_dischargeobs_spark.extensions.similarity import (
-        ivf_pq_index,
-        ivf_pq_refine,
-        ivf_pq_topk,
-    )
-
-    _, cents, coarse, queries, corpus = _refine_fixture(spark)
-    index = ivf_pq_index(corpus, coarse, cents, m=2, dim=4)
-    cand = ivf_pq_topk(
-        queries, index, coarse, cents, k=6, nprobe=2, m=2, dim=4
-    )
-    arrow = sorted(
-        map(
-            tuple,
-            ivf_pq_refine(cand, queries, corpus, k=3, kernel="arrow").collect(),
-        )
-    )
-    native = sorted(
-        map(
-            tuple,
-            ivf_pq_refine(
-                cand, queries, corpus, k=3, kernel="native"
-            ).collect(),
-        )
-    )
-    assert arrow == native  # floats compared exactly: bit parity
-    assert len(arrow) == 5 * 3
-
-
 def test_ivf_pq_refine_full_slate_equals_brute_force(spark):
     """With every list probed and the slate as big as the corpus, refine
     degenerates to the exact answer: ADC only GENERATES candidates, the
@@ -2521,7 +2472,7 @@ def test_ivf_pq_refine_full_slate_equals_brute_force(spark):
     refined = sorted(
         map(
             tuple,
-            ivf_pq_refine(cand, queries, corpus, k=3, kernel="arrow").collect(),
+            ivf_pq_refine(cand, queries, corpus, k=3).collect(),
         )
     )
     exact = sorted(map(tuple, brute_force_topk(queries, corpus, k=3).collect()))
@@ -2556,7 +2507,7 @@ def test_ivf_pq_refine_lifts_recall(spark):
     cand = ivf_pq_topk(
         queries, index, coarse, cents, k=6, nprobe=2, m=2, dim=4
     )
-    refined = ivf_pq_refine(cand, queries, corpus, k=3, kernel="arrow")
+    refined = ivf_pq_refine(cand, queries, corpus, k=3)
     r_un, r_ref = mean_recall(unrefined), mean_recall(refined)
     assert r_ref >= r_un
     assert r_ref > r_un, (
@@ -2565,11 +2516,9 @@ def test_ivf_pq_refine_lifts_recall(spark):
 
 
 def test_ivf_pq_refine_zero_norm_and_validation(spark):
-    """Kernel name is validated loudly; zero-norm queries and candidates
-    are excluded from scoring on both kernels (the shared cosine
-    contract), so a zero-norm query emits no rows rather than NULL/NaN."""
-    import pytest
-
+    """Zero-norm queries and candidates are excluded from scoring (the
+    shared cosine contract), so a zero-norm query emits no rows rather
+    than NULL/NaN."""
     from nr_rfc_dischargeobs_spark.extensions.similarity import (
         ivf_pq_refine,
         prepare,
@@ -2587,11 +2536,8 @@ def test_ivf_pq_refine_zero_norm_and_validation(spark):
     cand = spark.createDataFrame(
         [(1, 10), (1, 11), (2, 10), (2, 11)], ["query_id", "neighbor_id"]
     )
-    with pytest.raises(ValueError, match="kernel"):
-        ivf_pq_refine(cand, queries, corpus, k=2, kernel="blas")
-    for kernel in ("arrow", "native"):
-        out = ivf_pq_refine(cand, queries, corpus, k=2, kernel=kernel).collect()
-        assert {(r["query_id"], r["neighbor_id"]) for r in out} == {(2, 10)}
+    out = ivf_pq_refine(cand, queries, corpus, k=2).collect()
+    assert {(r["query_id"], r["neighbor_id"]) for r in out} == {(2, 10)}
 
 
 # ---------------------------------------------------------------- sq8 tier

@@ -1300,7 +1300,7 @@ def test_ivfadc_index_stream_matches_batch_and_replays_safe(spark, tmp_path):
     # stored-artifact posture the registered plan uses)
     batch_ix = similarity.ivf_pq_index(
         emb.filter(F.col("vec_id") >= 28), None, cb,
-        assign="local", residual=True, coarse_rows=coarse_rows,
+        residual=True, coarse_rows=coarse_rows,
     ).persist()
     try:
         want = sorted(map(tuple, batch_ix.select(*code_cols).collect()))
@@ -1418,8 +1418,7 @@ def test_tombstone_stream_deletes_flow_to_search(spark, tmp_path):
     path = str(tmp_path / "ix")
     ann_store.save_ivfadc(
         similarity.ivf_pq_index(prep, None, cb, m=2, dim=4,
-                                residual=True, coarse_rows=coarse_rows,
-                                assign="local"),
+                                residual=True, coarse_rows=coarse_rows),
         path, coarse_rows, cb, m=2, dim=4,
     )
 

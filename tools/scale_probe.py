@@ -383,12 +383,12 @@ def ann_recall_tier(spark, t: dict, adc_n: int) -> None:
             # bits as m=32/k=16) measured a near-noop 0.6691 vs 0.6484
             # at 100k, while doubling the BITRATE (m=32 × 8 bits = 256)
             # reads 0.9070 — distortion follows bits, not k alone.  The
-            # arrow encode is REQUIRED here (the unrolled literal tree
-            # heap-OOMs janino at this k).
+            # codebook is past LITERAL_BUDGET, so it trains (and encodes)
+            # on the arrow kernel — the unrolled literal tree heap-OOMs
+            # janino at this k.
             t0 = time.time()
             cb256 = similarity.pq_train_codebooks(
                 residual_sample, k=256, m=32, dim=64, iters=4,
-                encode="arrow",
             )
             t[f"ivfadc_train_m32_k256_sample_{fixture}"] = {
                 "sec": round(time.time() - t0, 1), "rows": 256 * 64,
@@ -399,7 +399,7 @@ def ann_recall_tier(spark, t: dict, adc_n: int) -> None:
                 ("trained", trained_cb, 32, True, coarse_df,
                  [1, 4, 16, 64], {}),
                 ("trained256", cb256, 32, True, coarse_df,
-                 [1, 4, 16, 64], {"assign": "arrow", "encode": "arrow"}),
+                 [1, 4, 16, 64], {"coarse_rows": coarse_rows}),
             ]
             if fixture == "clustered":
                 # the fully-TRAINED pipeline — no true-centers stand-in:
@@ -456,7 +456,6 @@ def ann_recall_tier(spark, t: dict, adc_n: int) -> None:
                 )
                 kmc = similarity.kmeans_lite(
                     sample, k=n_lists, iters=3, seeds=seeds,
-                    assign="arrow",
                 ).persist()
                 held.append(kmc)
                 nl = kmc.count()  # Lloyd dropout can leave < n_lists
@@ -473,7 +472,7 @@ def ann_recall_tier(spark, t: dict, adc_n: int) -> None:
                 )
                 t0 = time.time()
                 cbn = similarity.pq_train_codebooks(
-                    resn, k=256, m=32, dim=64, iters=4, encode="arrow"
+                    resn, k=256, m=32, dim=64, iters=4
                 )
                 t[f"ivfadc_train_m32_k256_lists{n_lists}_{fixture}"] = {
                     "sec": round(time.time() - t0, 1), "rows": 256 * 64,
@@ -481,7 +480,7 @@ def ann_recall_tier(spark, t: dict, adc_n: int) -> None:
                 variants.append((
                     f"trained256_lists{n_lists}", cbn, 32, True, kmc,
                     [1, 4, 16, 64],
-                    {"assign": "arrow", "encode": "arrow"},
+                    {"coarse_rows": km_rows},
                 ))
             for cb_lbl, cb, m_, residual, coarse_v, probes, bkw in variants:
                 t0 = time.time()
@@ -526,7 +525,6 @@ def ann_recall_tier(spark, t: dict, adc_n: int) -> None:
                 row = similarity.ann_recall(
                     similarity.ivf_pq_refine(
                         search(30, 4), q_side, c_side, k=10,
-                        kernel="arrow",
                     ),
                     exact10,
                 ).agg(
@@ -676,9 +674,10 @@ def r11_tier(spark, t: dict, n: int) -> None:
         cb = similarity.pq_train_codebooks(
             res_sample, k=k_, m=m_, dim=64, iters=4
         )
+        # centroid frame only: the window assignment this build has
+        # always timed (passing coarse_rows would pick the Arrow kernel)
         index = similarity.ivf_pq_index(
             c_side, coarse, cb, m=m_, dim=64, residual=True,
-            coarse_rows=coarse_rows,
         ).persist()
         held.append(index)
         index.count()
@@ -830,7 +829,7 @@ def r11_tier(spark, t: dict, n: int) -> None:
         ann_store.save_ivfadc(
             similarity.ivf_pq_index(
                 c_side, None, cb, m=m_, dim=64, residual=True,
-                coarse_rows=coarse_rows, assign="arrow",
+                coarse_rows=coarse_rows,
             ),
             path, coarse_rows, cb, m=m_, dim=64,
         )
@@ -858,7 +857,7 @@ def r11_tier(spark, t: dict, n: int) -> None:
         _recall(f"rebalance_recall_before_np{nprobe}")
         t0 = time.time()
         noop = ann_store.rebalance_ivfadc(
-            spark, path, c_side, threshold=1e9, assign="arrow"
+            spark, path, c_side, threshold=1e9
         )
         t["rebalance_noop_sweep"] = {
             "sec": round(time.time() - t0, 1),
@@ -868,7 +867,7 @@ def r11_tier(spark, t: dict, n: int) -> None:
               f"{noop['skew_before']}  rebalance_noop_sweep", file=sys.stderr)
         t0 = time.time()
         rep = ann_store.rebalance_ivfadc(
-            spark, path, c_side, threshold=2.0, assign="arrow"
+            spark, path, c_side, threshold=2.0
         )
         t["rebalance_sweep_1m"] = {
             "sec": round(time.time() - t0, 1),
@@ -940,7 +939,7 @@ def r12_tier(spark, t: dict, n: int) -> None:
         ann_store.save_ivfadc(
             similarity.ivf_pq_index(
                 prep_part, None, cb, m=m_, dim=64, residual=True,
-                coarse_rows=coarse_rows, assign="arrow",
+                coarse_rows=coarse_rows,
             ),
             path, coarse_rows, cb, m=m_, dim=64,
         )
@@ -1096,9 +1095,10 @@ def r12_adaptive_tier(spark, t: dict, n: int) -> None:
             ),
             k=k_, m=m_, dim=64, iters=4,
         )
+        # centroid frame only: the window assignment this build has
+        # always timed (passing coarse_rows would pick the Arrow kernel)
         index = similarity.ivf_pq_index(
             c_side, coarse, cb, m=m_, dim=64, residual=True,
-            coarse_rows=coarse_rows,
         ).persist()
         held.append(index)
         index.count()
@@ -1195,7 +1195,7 @@ def r13_tier(spark, t: dict, n: int) -> None:
         ann_store.save_ivfadc(
             similarity.ivf_pq_index(
                 prep_part, None, cb, m=m_, dim=64, residual=True,
-                coarse_rows=coarse_rows, assign="arrow",
+                coarse_rows=coarse_rows,
             ),
             path, coarse_rows, cb, m=m_, dim=64,
         )
@@ -1288,7 +1288,6 @@ def r13_tier(spark, t: dict, n: int) -> None:
             "lc_merge_segments",
             lambda: ann_store.merge_segments(
                 spark, [base_path, fresh_path], merged_path, raw_emb=emb,
-                assign="arrow",
             ),
         )
         t["lc_merge_segments"].update(
@@ -1380,7 +1379,7 @@ def r13_budget_tier(spark, t: dict, n: int) -> None:
         ix = ann_store.save_ivfadc(
             similarity.ivf_pq_index(
                 corpus, None, cb, m=m_, dim=64, residual=True,
-                coarse_rows=coarse_rows, assign="arrow",
+                coarse_rows=coarse_rows,
             ),
             root + "/ix", coarse_rows, cb, m=m_, dim=64,
         )
@@ -1459,7 +1458,7 @@ def r13_range_tier(spark, t: dict, n: int) -> None:
         ann_store.save_ivfadc(
             similarity.ivf_pq_index(
                 prep_part, None, cb, m=m_, dim=64, residual=True,
-                coarse_rows=coarse_rows, assign="arrow",
+                coarse_rows=coarse_rows,
             ),
             path, coarse_rows, cb, m=m_, dim=64,
         )
@@ -2008,8 +2007,8 @@ def main() -> int:
               prep_adc.filter(F.col("vec_id") < 256), ivfpq_index,
               coarse_cents, pq_cents, k=10, nprobe=4))
     # --- the refine stage on top of the same index: top-30 ADC slate
-    # re-scored EXACTLY against raw vectors (Arrow kernel; candidates
-    # broadcast into one corpus scan).  The marginal cost over the
+    # re-scored EXACTLY against raw vectors (candidates broadcast into
+    # one corpus scan).  The marginal cost over the
     # un-refined search is the production question — it buys back the
     # recall the PQ compression gave up (pinned in tests).
     timed(t, f"ivf_pq_refined_{adc_n // 1_000_000}m_codes_R30_k10",
@@ -2019,23 +2018,33 @@ def main() -> int:
                   coarse_cents, pq_cents, k=30, nprobe=4),
               prep_adc.filter(F.col("vec_id") < 256),
               prep_adc.filter(F.col("vec_id") >= 256),
-              k=10, kernel="arrow"))
+              k=10))
     ann_recall_tier(spark, t, adc_n)
-    # index-build A/B at the same volume: the window spelling pays one
-    # corpus-keyed exchange, the literal-fold spelling zero — both
-    # produce identical assignments (pinned in tests)
+    # index-build A/B at the same volume: the centroid-frame build pays
+    # one corpus-keyed window exchange; the literal fold (composed from
+    # its public pieces, the build `_local` has always timed) and the
+    # coarse_rows build pay none.  At 64 lists × 64 dims the fold stage
+    # is past LITERAL_BUDGET, so the coarse_rows build assigns on the
+    # Arrow kernel.  All three produce identical assignments (pinned in
+    # tests).
+    corpus_1m = prep_adc.filter(F.col("vec_id") >= 256)
+    coarse_rows_1m = [
+        (int(r["vec_id"]), [int(v) for v in r["q"]])
+        for r in coarse_cents.select("vec_id", "q").collect()
+    ]
     timed(t, f"ivf_pq_index_build_{adc_n // 1_000_000}m_window",
-          similarity.ivf_pq_index(
-              prep_adc.filter(F.col("vec_id") >= 256), coarse_cents,
-              pq_cents))
+          similarity.ivf_pq_index(corpus_1m, coarse_cents, pq_cents))
     timed(t, f"ivf_pq_index_build_{adc_n // 1_000_000}m_local",
+          similarity.pq_codes(
+              similarity.ivf_assign_local(corpus_1m, coarse_rows_1m),
+              pq_cents, m=4, dim=64, passthrough=("list_id",)))
+    timed(t, f"ivf_pq_index_build_{adc_n // 1_000_000}m_coarse_rows",
           similarity.ivf_pq_index(
-              prep_adc.filter(F.col("vec_id") >= 256), coarse_cents,
-              pq_cents, assign="local"))
+              corpus_1m, None, pq_cents, coarse_rows=coarse_rows_1m))
 
     # --- semantic decontamination at volume: 64-vector benchmark
-    # broadcast against a 1M-vector corpus, corpus scanned ONCE.  dim is
-    # deliberately NOT passed: the scoring sits in a
+    # broadcast against a 1M-vector corpus, corpus scanned ONCE.  The dot
+    # is the HOF fold, never unrolled: the scoring sits in a
     # BroadcastNestedLoopJoin stage, which whole-stage-codegen cannot
     # cover, so the unrolled dot runs INTERPRETED there and the 3-node
     # HOF fold beats it ~6× (measured 6.1 s vs 35.9 s on 12.8M d64
