@@ -134,12 +134,11 @@ def _local_path(path: str) -> str:
 
 @dataclass(frozen=True)
 class IvfadcIndex:
-    """A loaded IVFADC artifact: geometry + model, ready to search.
-
-    ``search`` is :func:`~.similarity.ivfadc_topk` over the stored
-    table — a plain partition-pruned scan (the ``_index_barrier``
-    pass-through shape), with the coarse centroids rebuilt as a
-    metadata-scale frame from the sidecar rows."""
+    """A loaded IVFADC artifact: geometry + model.  :func:`search`
+    and :func:`range_search` read it as a plain partition-pruned scan
+    of the stored table (the ``_index_barrier`` pass-through shape),
+    with the coarse centroids rebuilt as a metadata-scale frame from
+    the sidecar rows."""
 
     path: str
     m: int
@@ -161,117 +160,6 @@ class IvfadcIndex:
                 for cid, cq in self.coarse_rows
             ],
             "vec_id long, q array<bigint>, n long",
-        )
-
-    def prepare_queries(self, emb: DataFrame) -> DataFrame:
-        """Raw (vec_id, embedding) queries → the INDEX'S basis: the
-        sidecar rotation (if any) applied exactly as it was at build
-        time, then quantized.  This is why the rotation rides with the
-        artifact — a fresh session cannot search a rotated index
-        correctly without it."""
-        return apply_rotation(emb, self.rotation)
-
-    def search_embeddings(
-        self,
-        emb: DataFrame,
-        k: int = 3,
-        nprobe: int = 2,
-        where=None,
-        probe_matching_only: bool = False,
-        target_candidates: int | None = None,
-    ) -> DataFrame:
-        """Search from RAW embeddings — :meth:`prepare_queries` then
-        :meth:`search`.  The safe entry point for rotated artifacts:
-        it cannot be called with queries in the wrong basis."""
-        return self.search(
-            self.prepare_queries(emb), k=k, nprobe=nprobe, where=where,
-            probe_matching_only=probe_matching_only,
-            target_candidates=target_candidates,
-        )
-
-    def range_search_embeddings(
-        self,
-        emb: DataFrame,
-        threshold: float,
-        nprobe: int = 2,
-        where=None,
-        probe_matching_only: bool = False,
-        target_candidates: int | None = None,
-    ) -> DataFrame:
-        """Range search from RAW embeddings — :meth:`prepare_queries`
-        then :meth:`range_search` (the :meth:`search_embeddings`
-        posture for the radius question)."""
-        return self.range_search(
-            self.prepare_queries(emb), threshold, nprobe=nprobe,
-            where=where, probe_matching_only=probe_matching_only,
-            target_candidates=target_candidates,
-        )
-
-    def range_search(
-        self,
-        queries: DataFrame,
-        threshold: float,
-        nprobe: int = 2,
-        where=None,
-        probe_matching_only: bool = False,
-        target_candidates: int | None = None,
-    ) -> DataFrame:
-        """All probed neighbors with reconstructed cosine >=
-        ``threshold`` — :func:`~.similarity.ivfadc_range` over the
-        stored table (FAISS ``range_search``): the same probed pruned
-        scan and hybrid dials as :meth:`search`, with the rank window
-        DELETED — a scan-local predicate instead of a per-query sort
-        exchange.  Tombstones anti-joined like every search surface.
-        Output: (query_id, neighbor_id, cosine_adc), unranked."""
-        spark = queries.sparkSession
-        return similarity.ivfadc_range(
-            queries,
-            self.frame(spark),
-            self.coarse_frame(spark),
-            self.centroid_rows,
-            threshold,
-            nprobe=nprobe,
-            m=self.m,
-            dim=self.dim,
-            where=where,
-            probe_matching_only=probe_matching_only,
-            anti=deleted_ids(spark, self.path),
-            target_candidates=target_candidates,
-        )
-
-    def search(
-        self,
-        queries: DataFrame,
-        k: int = 3,
-        nprobe: int = 2,
-        where=None,
-        probe_matching_only: bool = False,
-        target_candidates: int | None = None,
-    ) -> DataFrame:
-        """Residual-ADC top-k over the stored index.  ``queries`` is a
-        :func:`~.similarity.prepare` frame ALREADY IN THE INDEX'S BASIS
-        (for a rotated artifact, use :meth:`search_embeddings` or
-        :meth:`prepare_queries` — raw-basis queries against a rotated
-        index score garbage); output is ivfadc_topk's (query_id,
-        neighbor_id, rank, cosine_adc).  ``where`` pre-filters the
-        probed-list scan (hybrid search) — see
-        :func:`~.similarity.ivfadc_topk`.  Tombstones
-        (:func:`delete_vectors`) are anti-joined automatically —
-        deleted vectors can neither rank nor displace survivors."""
-        spark = queries.sparkSession
-        return similarity.ivfadc_topk(
-            queries,
-            self.frame(spark),
-            self.coarse_frame(spark),
-            self.centroid_rows,
-            k=k,
-            nprobe=nprobe,
-            m=self.m,
-            dim=self.dim,
-            where=where,
-            probe_matching_only=probe_matching_only,
-            anti=deleted_ids(spark, self.path),
-            target_candidates=target_candidates,
         )
 
 
@@ -296,7 +184,7 @@ def save_ivfadc(
     the corpus went through before indexing — the FAISS
     ``OPQxx,IVFyy,PQzz`` chain's OPQ matrix, carried WITH the artifact
     so any fresh session rotates queries identically
-    (:meth:`IvfadcIndex.search_embeddings`).  Rotated artifacts write
+    (:func:`search` applies it to raw queries).  Rotated artifacts write
     format version 2; version-1 readers refuse them instead of
     silently searching with unrotated queries."""
     similarity._pq_check(centroid_rows, m, dim)
@@ -441,8 +329,8 @@ def delete_vectors(spark: SparkSession, path: str, where) -> int:
     store: ``where`` (a Column or SQL string over the stored table's
     columns) selects rows whose ``vec_id`` is APPENDED to the
     ``_deleted`` tombstone side table; every subsequent search
-    (:meth:`IvfadcIndex.search`, hence also :func:`search_segments`
-    and the SQL TVF) anti-joins the tombstones BEFORE top-k selection,
+    (:func:`search`, :func:`range_search` and the SQL TVFs)
+    anti-joins the tombstones BEFORE top-k selection,
     so deleted vectors can neither rank nor displace survivors.  The
     bytes stay on disk until :func:`compact_deleted` (pure purge) or
     :func:`rebalance_ivfadc` (purge folded into the drift rewrite)
@@ -464,7 +352,7 @@ def delete_vectors(spark: SparkSession, path: str, where) -> int:
     Tombstones are PER-STORE, which is what makes delete-then-reinsert
     work under the segment model: re-admission lands in a fresh
     directory (the quiesced contract), where the new copy carries no
-    tombstone — :func:`search_segments` suppresses only the frozen
+    tombstone — a multi-path :func:`search` suppresses only the frozen
     base's stale copy and returns the fresh one (pinned in tests).
     Re-appending the same vec_id into the SAME tombstoned store would
     stay suppressed until :func:`compact_deleted` clears the side
@@ -515,50 +403,15 @@ def compact_deleted(spark: SparkSession, path: str) -> dict:
     return {"compacted": True, "purged": int(dropped), "kept": int(kept)}
 
 
-def search_segments(
-    spark: SparkSession,
-    paths: list[str],
-    emb: DataFrame,
-    k: int = 3,
-    nprobe: int = 2,
-    where=None,
-    probe_matching_only: bool = False,
-    target_candidates: int | None = None,
-) -> DataFrame:
-    """Search SEVERAL stored indexes as one — the FAISS-shards /
-    Lucene-segments posture that :func:`rebalance_ivfadc`'s contract
-    makes the steady state: after a sweep, streamed admission resumes
-    into a NEW directory and the swept store is its frozen base
-    segment, so "the" index is a frozen base plus one or more fresh
-    admission segments and production search must read them all.
-
-    Per segment this is exactly :meth:`IvfadcIndex.search_embeddings`:
-    the segment's OWN coarse quantizer ranks its OWN lists, its OWN
-    sidecar rotation is applied to the raw queries (segments may
-    disagree on basis — a rotated base + an unrotated fresh segment is
-    legal, which is why the input is RAW embeddings, not a prepared
-    frame in any one basis), its OWN tombstones are anti-joined.
-    Segments must agree on ``(m, dim)`` — refused loudly otherwise,
-    because reconstructed-cosine scores across different geometries
-    are not one comparable scale.  The global top-k then merges the
-    per-segment slates: reconstructed cosine approximates the SAME
-    true cosine in every segment, so a max-per-(query, neighbor)
-    dedup (a vector re-admitted into a fresh segment appears twice)
-    followed by one rank window is the whole merge.
-
-    Scale shape: each segment search keeps its own plan — pruned
-    index scan, broadcast probe side, nprobe×m-byte cost — and the
-    merge operates on slates of ≤ k·n_segments rows per query, never
-    on corpus-scale data; the one added exchange is the slate-sized
-    groupBy.  ``where``/``probe_matching_only`` pass through to every
-    segment (each computes its own matched-list set from its own
-    pruned scan).
-
-    Output: (query_id, neighbor_id, rank, cosine_adc) — identical to
-    a single-index search, pinned in tests to be row-identical to
-    searching one merged index when the segments share a model."""
+def _slates(paths: list[str], emb: DataFrame, question, **dials) -> list:
+    """One ``question`` (``ivfadc_topk`` or ``ivfadc_range``) asked of
+    every stored index in ``paths``: each with its OWN coarse, its OWN
+    sidecar rotation applied to the raw ``emb`` rows
+    (:func:`apply_rotation`), and its OWN tombstones anti-joined."""
+    if isinstance(paths, str):
+        raise TypeError("paths is a list of index directories")
     if not paths:
-        raise ValueError("search_segments needs at least one segment path")
+        raise ValueError("search needs at least one segment path")
     idxs = [load_ivfadc(p) for p in paths]
     geoms = {(ix.m, ix.dim) for ix in idxs}
     if len(geoms) != 1:
@@ -568,30 +421,85 @@ def search_segments(
             " geometries are not comparable; rebuild to one geometry"
             " before merging"
         )
-    slates = [
-        ix.search_embeddings(
-            emb, k=k, nprobe=nprobe, where=where,
-            probe_matching_only=probe_matching_only,
-            target_candidates=target_candidates,
+    spark = emb.sparkSession
+    return [
+        question(
+            apply_rotation(emb, ix.rotation),
+            ix.frame(spark),
+            ix.coarse_frame(spark),
+            ix.centroid_rows,
+            m=ix.m,
+            dim=ix.dim,
+            anti=deleted_ids(spark, ix.path),
+            **dials,
         )
         for ix in idxs
     ]
+
+
+def _best_per_pair(slates: list) -> DataFrame:
+    """Max-per-(query, neighbor) dedup of the segment slates: a vector
+    re-admitted into a fresh segment appears twice, and reconstructed
+    cosine approximates the SAME true cosine in every segment."""
     union = reduce(lambda a, b: a.unionByName(b), slates)
-    best = union.groupBy("query_id", "neighbor_id").agg(
+    return union.groupBy("query_id", "neighbor_id").agg(
         F.max("cosine_adc").alias("cosine_adc")
     )
+
+
+def search(
+    paths: list[str],
+    emb: DataFrame,
+    k: int = 3,
+    nprobe: int = 2,
+    where=None,
+    probe_matching_only: bool = False,
+    target_candidates: int | None = None,
+) -> DataFrame:
+    """Residual-ADC top-k over one or more stored indexes, from RAW
+    ``(vec_id, embedding)`` query rows.  Each index applies its own
+    sidecar rotation to the queries, so a query can never reach an
+    index in the wrong basis.  ``where`` pre-filters the probed-list
+    scan (hybrid search), ``probe_matching_only`` and
+    ``target_candidates`` steer the probe — see
+    :func:`~.similarity.ivfadc_topk`.  Tombstones
+    (:func:`delete_vectors`) are anti-joined per index, so deleted
+    vectors can neither rank nor displace survivors.
+
+    ONE path is that index's own :func:`~.similarity.ivfadc_topk`
+    slate, with no merge step.  SEVERAL paths are searched as one
+    index — the FAISS-shards / Lucene-segments posture that
+    :func:`rebalance_ivfadc`'s contract makes the steady state (a
+    frozen swept base plus fresh admission segments).  Segments may
+    disagree on model and basis but must agree on ``(m, dim)`` —
+    refused loudly otherwise, because scores across different
+    geometries are not one comparable scale.  The per-segment slates
+    merge by a max-per-(query, neighbor) dedup and one global rank
+    window; the merge works on ≤ k·n_segments rows per query, never on
+    corpus-scale data.
+
+    Output: (query_id, neighbor_id, rank, cosine_adc).  Pinned in
+    tests: segments sharing a model search row-identically to one
+    merged index."""
+    slates = _slates(
+        paths, emb, similarity.ivfadc_topk, k=k, nprobe=nprobe,
+        where=where, probe_matching_only=probe_matching_only,
+        target_candidates=target_candidates,
+    )
+    if len(slates) == 1:
+        return slates[0]
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_adc").desc(), F.col("neighbor_id").asc()
     )
     return (
-        best.withColumn("rank", F.row_number().over(w))
+        _best_per_pair(slates)
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "cosine_adc")
     )
 
 
-def range_search_segments(
-    spark: SparkSession,
+def range_search(
     paths: list[str],
     emb: DataFrame,
     threshold: float,
@@ -600,52 +508,26 @@ def range_search_segments(
     probe_matching_only: bool = False,
     target_candidates: int | None = None,
 ) -> DataFrame:
-    """RANGE search over SEVERAL stored indexes as one — the radius
-    question (:meth:`IvfadcIndex.range_search`) asked of the frozen
-    base + fresh admission segments that :func:`search_segments`
-    reads: every probed neighbor in ANY segment whose reconstructed
-    cosine is ``>= threshold``.  Per segment this is exactly
-    :meth:`IvfadcIndex.range_search_embeddings` — own coarse, own
-    sidecar rotation on the raw queries, own tombstones, all hybrid
-    dials — and the merge is even lighter than top-k's: a
-    max-per-(query, neighbor) dedup (a re-admitted vector appears in
-    two segments; per-segment thresholding commutes with the max,
-    since any copy ≥ tau implies the max is) and NO rank window at
-    all, so the only exchange the merge adds is the dedup groupBy on
-    the already-thresholded rows.  Geometry must agree across
-    segments for the same reason as :func:`search_segments` — the
-    threshold is one scale only if every score approximates the same
-    true cosine.
+    """All probed neighbors with reconstructed cosine >= ``threshold``
+    (FAISS ``range_search``) over one or more stored indexes — the
+    :func:`search` contract (raw queries, per-index rotation and
+    tombstones, the same hybrid dials) with the rank window DELETED: a
+    scan-local predicate instead of a per-query sort exchange
+    (:func:`~.similarity.ivfadc_range`).  Several paths merge by the
+    max-per-(query, neighbor) dedup alone — per-segment thresholding
+    commutes with the max, so the dedup groupBy on already-thresholded
+    rows is the only exchange the merge adds.
 
-    Output: (query_id, neighbor_id, cosine_adc) — unranked, like
-    :func:`~.similarity.ivfadc_range`.  Pinned in tests: equals
-    :func:`search_segments` with a full-width slate filtered to
-    score >= tau."""
-    if not paths:
-        raise ValueError(
-            "range_search_segments needs at least one segment path"
-        )
-    idxs = [load_ivfadc(p) for p in paths]
-    geoms = {(ix.m, ix.dim) for ix in idxs}
-    if len(geoms) != 1:
-        raise ValueError(
-            f"segments disagree on (m, dim): {sorted(geoms)} —"
-            " reconstructed-cosine scores across different PQ"
-            " geometries are not one comparable threshold scale;"
-            " rebuild to one geometry before merging"
-        )
-    slates = [
-        ix.range_search_embeddings(
-            emb, threshold, nprobe=nprobe, where=where,
-            probe_matching_only=probe_matching_only,
-            target_candidates=target_candidates,
-        )
-        for ix in idxs
-    ]
-    union = reduce(lambda a, b: a.unionByName(b), slates)
-    return union.groupBy("query_id", "neighbor_id").agg(
-        F.max("cosine_adc").alias("cosine_adc")
+    Output: (query_id, neighbor_id, cosine_adc), unranked.  Pinned in
+    tests: equals :func:`search` with a full-width slate filtered to
+    score >= threshold."""
+    slates = _slates(
+        paths, emb, similarity.ivfadc_range, threshold=threshold,
+        nprobe=nprobe, where=where,
+        probe_matching_only=probe_matching_only,
+        target_candidates=target_candidates,
     )
+    return slates[0] if len(slates) == 1 else _best_per_pair(slates)
 
 
 def merge_segments(
@@ -656,7 +538,7 @@ def merge_segments(
     allow_requantize: bool = False,
 ) -> dict:
     """Fold segments back into ONE store — the lifecycle CLOSER that
-    :func:`search_segments` was missing: after a rebalance the swept
+    multi-path :func:`search` was missing: after a rebalance the swept
     store is a frozen base and admission accumulates fresh segments,
     so search cost grows linearly with the segment count (each segment
     re-prepares and re-probes every query) and nothing shrinks the set
@@ -698,12 +580,12 @@ def merge_segments(
     per-store semantics every search applies), and the merged store
     starts tombstone-free.  Duplicate vec_ids across segments resolve
     LATER-SEGMENT-WINS on live rows — re-admission supersedes the
-    frozen base, matching :func:`search_segments` (whose max-score
+    frozen base, matching multi-path :func:`search` (whose max-score
     dedup is the search-time view of the same rule; the merged store
     keeps one physical copy, the latest admission).  Note the
     composition: a fresh segment's tombstone kills only the fresh
     copy, so a base copy of the same id SURVIVES the merge — exactly
-    what ``search_segments`` returns on the pre-merge set.
+    what :func:`search` returns on the pre-merge set.
 
     ``dest == paths[0]`` merges IN PLACE through the crash-recoverable
     staged swap (:func:`~..streaming.documents.compact_corpus` —
@@ -948,7 +830,7 @@ def rebalance_ivfadc(
        stage so table and model can never be swapped separately.
 
     ``corpus_prepared`` is the current corpus in the INDEX'S BASIS
-    (for a rotated artifact: ``load_ivfadc(path).prepare_queries(raw)``)
+    (for a rotated artifact: ``apply_rotation(raw, loaded.rotation)``)
     — codes cannot be reassigned from the stored table alone, since
     re-encoding decoded reconstructions would compound quantization
     error into the scores.

@@ -2847,7 +2847,7 @@ def _ivfadc_scored(
     # without the window's exchange barrier CollapseProject re-inlines
     # the query frame's q EXPRESSION into every one of those references
     # (no CSE), and when q is itself heavy — the rotated-basis
-    # search_embeddings path unrolls a 64-term Hadamard per element —
+    # ann_store.search path unrolls a 64-term Hadamard per element —
     # the plan detonates: measured 1.9 s → 92 s (rotated) and 2.1 s →
     # 149 s (segments_range) with 100+ MiB task binaries.  The window's
     # exchange materializes q ONCE on a bounded probe batch — that

@@ -9,6 +9,7 @@ so every score column is bit-identical across engines.
 from __future__ import annotations
 
 import contextlib as _contextlib
+import functools
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -26,6 +27,7 @@ from ..extensions import (
     sketches,
     text as textops,
 )
+from ..extensions import ann_store
 from . import load
 
 # Plan-owned cache handles: two registered plans persist an intermediate
@@ -2990,6 +2992,12 @@ QUALIFY rank <= 3
 """
 
 
+def _queries(frame: DataFrame) -> DataFrame:
+    """The query rows of every IVF plan: 12 ≤ vec_id < 28 (raw rows for
+    the stored-index searches, a prepared frame for the in-plan ones)."""
+    return frame.filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
+
+
 def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ search end-to-end: PQ codebook = seeds (vec_id < 8), coarse
     quantizer = 4 lists (8 ≤ vec_id < 12), queries 12 ≤ vec_id < 28
@@ -3006,7 +3014,7 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in prep.filter(F.col("vec_id") < 8).collect()
     ]
     coarse = prep.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 12))
-    queries = prep.filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
+    queries = _queries(prep)
     corpus = prep.filter(F.col("vec_id") >= 28)
     # the index is a STORED artifact in production (build once, search
     # many; write it partitioned by list_id).  persist() reproduces that
@@ -3148,7 +3156,7 @@ def sim_ivf_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in prep.filter(F.col("vec_id") < 8).collect()
     ]
     coarse = prep.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 12))
-    queries = prep.filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
+    queries = _queries(prep)
     corpus = prep.filter(F.col("vec_id") >= 28)
     # same load-bearing persist as sim_ivf_pq_topk (janino compile barrier
     # + the stored-artifact posture); released via _PLAN_CACHES.
@@ -3198,34 +3206,52 @@ QUALIFY rank <= 3
 """
 
 
-def _ivfadc_parts(spark: SparkSession, sf_dir: str, iters: int = 1):
-    """Shared construction for the TRAINED (IVFADC) plans: coarse = raw
-    rows 8–12, queries 12–28, corpus ≥ 28; PQ codebook trained with
-    ``iters`` Lloyd steps over CORPUS RESIDUALS, seeded from the 8
-    smallest corpus vec_ids (m=4, dsub=16, k=8 — sized so the DuckDB
-    oracle can re-derive the whole training pass declaratively).
+def _ivfadc_train(
+    spark: SparkSession,
+    sf_dir: str,
+    rotation: dict | None = None,
+    lists: tuple[int, int] = (8, 12),
+    parity: int | None = None,
+):
+    """Shared construction for the TRAINED (IVFADC) plans and session
+    stores: the embeddings in the basis ``rotation`` describes
+    (:func:`~..extensions.ann_store.apply_rotation` — ``None`` is the
+    raw basis), coarse = rows ``lists[0]``–``lists[1]``, corpus ≥ 28
+    (only ids of ``parity`` when given — the two-segment split); PQ
+    codebook trained with one Lloyd step over CORPUS RESIDUALS, seeded
+    from the 8 smallest corpus vec_ids (m=4, dsub=16, k=8 — sized so
+    the DuckDB oracle can re-derive the whole training pass
+    declaratively).  Returns (basis, coarse, corpus, coarse_rows, cb).
 
     Stated plan-build exception, same as the other PQ plans: the coarse
-    collect (4 rows) and the training pass (one sampled-aggregate job
-    per iteration collecting k·dim ints — a model parameter) run at
-    construction."""
-    emb = load(spark, sf_dir, "embeddings")
-    prep = similarity.prepare(emb)
-    coarse = prep.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 12))
-    queries = prep.filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
-    corpus = prep.filter(F.col("vec_id") >= 28)
+    collect (≤ 4 rows) and the training pass (one sampled-aggregate job
+    collecting k·dim ints — a model parameter) run at construction."""
+    basis = ann_store.apply_rotation(
+        load(spark, sf_dir, "embeddings"), rotation
+    )
+    lo, hi = lists
+    coarse = basis.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
+    in_corpus = F.col("vec_id") >= 28
+    if parity is not None:
+        in_corpus = in_corpus & (F.col("vec_id") % 2 == parity)
+    corpus = basis.filter(in_corpus)
     coarse_rows = [
         (int(r["vec_id"]), [int(v) for v in r["q"]])
         for r in coarse.select("vec_id", "q").collect()
     ]
     # r13 A/B: the residual-training input deliberately KEEPS the
-    # window spelling.  Folding the assignment into the scan
-    # (ivf_assign_local) re-inlines the quantize transform + 4 unrolled
-    # 64-term dots into every expression pq_train_codebooks evaluates,
-    # and the training loop re-evaluates that lineage in every collect
-    # job — measured 3.2 s → 27.7 s plan build for ext_sim_ivfadc_topk
-    # at sf0.1.  The window's exchange materializes (q, list_id) once
-    # and every training job reads the narrow shuffled rows.
+    # window spelling, in every basis.  Folding the assignment into the
+    # scan (ivf_assign_local) re-inlines the quantize transform + 4
+    # unrolled 64-term dots into every expression pq_train_codebooks
+    # evaluates, and the training loop re-evaluates that lineage in
+    # every collect job — measured 3.2 s → 27.7 s plan build for
+    # ext_sim_ivfadc_topk at sf0.1.  In the rotated basis q is itself a
+    # 64-term-per-element unrolled Hadamard expression, and the fold
+    # re-inlines that rotation into every distance reference
+    # (CollapseProject has no CSE), detonating the plan — measured
+    # 138 MiB task binaries and a 315 s store build at sf0.01.  The
+    # window's exchange materializes (q, list_id) once and every
+    # training job reads the narrow shuffled rows.
     residuals = similarity.residualize(
         similarity.ivf_assign(corpus, coarse, 1, None), coarse_rows
     )
@@ -3237,10 +3263,8 @@ def _ivfadc_parts(spark: SparkSession, sf_dir: str, iters: int = 1):
     # 1.9-2.7 → 2.0-2.5).  At a real training scale (many iterations,
     # bounded sample) materializing the sample is still the right
     # posture — pass a pre-persisted frame to pq_train_codebooks then.
-    cb = similarity.pq_train_codebooks(
-        residuals, k=8, m=4, dim=64, iters=iters
-    )
-    return coarse, queries, corpus, coarse_rows, cb
+    cb = similarity.pq_train_codebooks(residuals, k=8, m=4, dim=64, iters=1)
+    return basis, coarse, corpus, coarse_rows, cb
 
 
 def sim_pq_train_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3252,7 +3276,7 @@ def sim_pq_train_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     in long form (cid, pos, val): every downstream IVFADC query consumes
     exactly these integers as literals, so a green row here pins the
     entire model-parameter derivation, not just the search."""
-    _, _, _, _, cb = _ivfadc_parts(spark, sf_dir, iters=1)
+    cb = _ivfadc_train(spark, sf_dir)[-1]
     rows = [
         (int(cid), int(pos), int(vec[pos]))
         for cid, vec in cb
@@ -3270,11 +3294,9 @@ def sim_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivfadc_topk`) at nprobe=2 of 4 lists, top-3 by reconstructed
     cosine.  Same persist barrier as the other PQ plans (stored-artifact
     posture + janino compile isolation)."""
-    coarse, queries, corpus, coarse_rows, cb = _ivfadc_parts(
-        spark, sf_dir, iters=1
-    )
+    prep, coarse, corpus, coarse_rows, cb = _ivfadc_train(spark, sf_dir)
     # r13: scan-local index build (coarse rows already collected by
-    # _ivfadc_parts) — the window spelling paid a corpus-keyed exchange
+    # _ivfadc_train) — the window spelling paid a corpus-keyed exchange
     # inside the persist materialization (guide §2.4)
     index = similarity.ivf_pq_index(
         corpus, coarse, cb, m=4, dim=64, residual=True,
@@ -3282,7 +3304,7 @@ def sim_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).persist()
     _PLAN_CACHES.append(index)
     return similarity.ivfadc_topk(
-        queries, index, coarse, cb, k=3, nprobe=2, m=4, dim=64
+        _queries(prep), index, coarse, cb, k=3, nprobe=2, m=4, dim=64
     )
 
 
@@ -3303,8 +3325,6 @@ def _ivfadc_store_fingerprint(sf_dir: str, variant: str = "base") -> str:
     import hashlib
     import json as _json
     import os
-
-    from ..extensions import ann_store
 
     emb_dir = os.path.join(sf_dir, "embeddings.parquet")
     files = []
@@ -3378,17 +3398,14 @@ def sim_ivfadc_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the search result, so the value hash is identical either way;
     the offline-build half stays covered by the first call here and by
     ``tests/test_ann_store.py`` directly."""
-    from ..extensions import ann_store
-
-    path = _ensure_base_store(spark, sf_dir)
-    queries = similarity.prepare(load(spark, sf_dir, "embeddings")).filter(
-        (F.col("vec_id") >= 12) & (F.col("vec_id") < 28)
+    return ann_store.search(
+        [_ensure_base_store(spark, sf_dir)],
+        _queries(load(spark, sf_dir, "embeddings")), k=3, nprobe=2,
     )
-    return ann_store.load_ivfadc(path).search(queries, k=3, nprobe=2)
 
 
 def _session_store_path(sf_dir: str, kind: str) -> str:
-    """Session-store location for a (sf_dir, variant) pair.  The path
+    """Session-store location for a (sf_dir, kind) pair.  The path
     carries the CURRENT USER (per-user cache: on a shared box two users'
     builds can neither race nor squat each other's directory) plus the
     md5 of ``sf_dir``."""
@@ -3402,10 +3419,6 @@ def _session_store_path(sf_dir: str, kind: str) -> str:
     return os.path.join(
         tempfile.gettempdir(), f"nr_rfc_spark_{user}_ivfadc_{kind}_{tag}"
     )
-
-
-def _base_store_path(sf_dir: str) -> str:
-    return _session_store_path(sf_dir, "store")
 
 
 @_contextlib.contextmanager
@@ -3428,30 +3441,60 @@ def _build_lock(path: str):
         os.close(fd)
 
 
-def _ensure_base_store(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once-per-fingerprint for the shared base IVFADC artifact —
-    used by BOTH the store query and the filtered-search query (same
-    geometry, same trained model; whichever runs first builds)."""
-    from ..extensions import ann_store
+def _session_store(
+    spark: SparkSession, sf_dir: str, kind: str, variant: str, build
+) -> str:
+    """Build-once-per-fingerprint for a session-scoped IVFADC store:
+    the ``kind`` store of ``sf_dir`` is reused while its committed
+    fingerprint (:func:`_ivfadc_store_fingerprint` of ``variant``)
+    matches.  Otherwise ``build(spark, sf_dir, path)`` runs under
+    :func:`_build_lock` — after a re-check, since a racer may have
+    built it meanwhile — and the fingerprint commits LAST, so a crashed
+    build leaves none and the next call rebuilds.  ``sf_dir`` is
+    normalized first: ``dir`` and ``dir/`` share one store."""
+    import os
 
-    path = _base_store_path(sf_dir)
-    fpr = _ivfadc_store_fingerprint(sf_dir)
+    sf_dir = os.path.normpath(sf_dir)
+    path = _session_store_path(sf_dir, kind)
+    fpr = _ivfadc_store_fingerprint(sf_dir, variant)
     if not _session_store_fresh(path, fpr):
         with _build_lock(path):
-            if _session_store_fresh(path, fpr):  # a racer built it
-                return path
-            coarse, _, corpus, coarse_rows, cb = _ivfadc_parts(
-                spark, sf_dir, iters=1
-            )
-            ann_store.save_ivfadc(
-                similarity.ivf_pq_index(
-                    corpus, coarse, cb, m=4, dim=64, residual=True,
-                    coarse_rows=coarse_rows,
-                ),
-                path, coarse_rows, cb, m=4, dim=64,
-            )
-            _commit_store_fingerprint(path, fpr)
+            if not _session_store_fresh(path, fpr):
+                build(spark, sf_dir, path)
+                _commit_store_fingerprint(path, fpr)
     return path
+
+
+def _build_store(
+    spark: SparkSession,
+    sf_dir: str,
+    path: str,
+    rotation: dict | None = None,
+    lists: tuple[int, int] = (8, 12),
+    parity: int | None = None,
+) -> None:
+    """Train (:func:`_ivfadc_train`), encode and save one store.  The
+    scan-local encode (``coarse_rows``) runs only in the raw basis: a
+    rotated corpus ``q`` is the unrolled Hadamard, and the window
+    assignment's exchange is the barrier that evaluates it once per
+    row (see :func:`_ivfadc_train`)."""
+    _, coarse, corpus, coarse_rows, cb = _ivfadc_train(
+        spark, sf_dir, rotation, lists, parity
+    )
+    ann_store.save_ivfadc(
+        similarity.ivf_pq_index(
+            corpus, coarse, cb, m=4, dim=64, residual=True,
+            coarse_rows=coarse_rows if rotation is None else None,
+        ),
+        path, coarse_rows, cb, m=4, dim=64, rotation=rotation,
+    )
+
+
+def _ensure_base_store(spark: SparkSession, sf_dir: str) -> str:
+    """The shared base IVFADC store — used by the store query and the
+    hybrid/range/budget queries (same geometry, same trained model;
+    whichever runs first builds)."""
+    return _session_store(spark, sf_dir, "store", "base", _build_store)
 
 
 # shared CTE chain for the IVFADC plans: coarse assignment → residuals →
@@ -3600,14 +3643,10 @@ def sim_ivfadc_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to filtering the in-plan index (same codes bit-exact
     through parquet); recall under selectivity is probed at 1M codes in
     SCALE_PROBE.json."""
-    from ..extensions import ann_store
-
-    path = _ensure_base_store(spark, sf_dir)
-    queries = similarity.prepare(load(spark, sf_dir, "embeddings")).filter(
-        (F.col("vec_id") >= 12) & (F.col("vec_id") < 28)
-    )
-    return ann_store.load_ivfadc(path).search(
-        queries, k=3, nprobe=2, where="vec_id % 3 = 1"
+    return ann_store.search(
+        [_ensure_base_store(spark, sf_dir)],
+        _queries(load(spark, sf_dir, "embeddings")),
+        k=3, nprobe=2, where="vec_id % 3 = 1",
     )
 
 
@@ -3625,35 +3664,8 @@ SIM_IVFADC_FILTERED_SQL = _IVFADC_CTES.rstrip() + _IVFADC_SEARCH_CTES.format(
 # ``rotate_prepare``) — its recall lift is pinned at 1M on the
 # anisotropic fixture in SCALE_PROBE.json, where bit-exact oracle
 # checking is impossible by construction (eigendecomposition floats).
-def _had64() -> list[list[int]]:
-    return similarity.hadamard_rows(64)
-
-
-def _ivfadc_rot_parts(spark: SparkSession, sf_dir: str):
-    """The ``_ivfadc_parts`` chain run in the ROTATED basis: prepare →
-    hadamard rotate → coarse 8–12 / corpus ≥ 28 split → residual
-    codebook training.  Same stated plan-build exception."""
-    emb = load(spark, sf_dir, "embeddings")
-    rot = similarity.rotate_quantized(similarity.prepare(emb), _had64())
-    coarse = rot.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 12))
-    corpus = rot.filter(F.col("vec_id") >= 28)
-    coarse_rows = [
-        (int(r["vec_id"]), [int(v) for v in r["q"]])
-        for r in coarse.select("vec_id", "q").collect()
-    ]
-    # NOTE (r13): this path deliberately KEEPS the window spelling.  The
-    # rotated corpus's q column is itself a 64-term-per-element unrolled
-    # Hadamard expression; composing ivf_assign_local's literal fold on
-    # top re-inlines that rotation into every distance reference
-    # (CollapseProject has no CSE), detonating the plan — measured
-    # 138 MiB task binaries and a 315 s store build at sf0.01.  The
-    # window's exchange is the barrier that keeps the rotation evaluated
-    # once per row.
-    residuals = similarity.residualize(
-        similarity.ivf_assign(corpus, coarse, 1, None), coarse_rows
-    )
-    cb = similarity.pq_train_codebooks(residuals, k=8, m=4, dim=64, iters=1)
-    return emb, coarse, corpus, coarse_rows, cb
+def _hadamard() -> dict:
+    return {"mode": "post_int", "components": similarity.hadamard_rows(64)}
 
 
 def sim_ivfadc_rotated(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3662,47 +3674,23 @@ def sim_ivfadc_rotated(spark: SparkSession, sf_dir: str) -> DataFrame:
     train coarse/PQ in the rotated basis, store the index WITH the
     rotation in its model sidecar (``ann_store`` format v2), then — the
     part that proves the sidecar carries everything — search from RAW
-    query embeddings via :meth:`IvfadcIndex.search_embeddings`, which
+    query embeddings via :func:`~..extensions.ann_store.search`, which
     must rediscover and apply the rotation itself.  Same session-scoped
     build-once discipline as ``sim_ivfadc_store_topk``: the timed body
     is rotate-queries + load + search, the production marginal cost."""
-    from ..extensions import ann_store
-
-    path = _session_store_path(sf_dir, "rot")
-    fpr = _ivfadc_store_fingerprint(sf_dir, variant="rotated-hadamard")
-    if not _session_store_fresh(path, fpr):
-        with _build_lock(path):
-            if not _session_store_fresh(path, fpr):
-                _, coarse, corpus, coarse_rows, cb = _ivfadc_rot_parts(
-                    spark, sf_dir
-                )
-                ann_store.save_ivfadc(
-                    # window assign, NOT "local": corpus q is the
-                    # unrolled rotation — see _ivfadc_rot_parts
-                    similarity.ivf_pq_index(
-                        corpus, coarse, cb, m=4, dim=64, residual=True,
-                    ),
-                    path, coarse_rows, cb, m=4, dim=64,
-                    rotation={"mode": "post_int", "components": _had64()},
-                )
-                _commit_store_fingerprint(path, fpr)
-    queries_raw = load(spark, sf_dir, "embeddings").filter(
-        (F.col("vec_id") >= 12) & (F.col("vec_id") < 28)
+    path = _session_store(
+        spark, sf_dir, "rot", "rotated-hadamard",
+        functools.partial(_build_store, rotation=_hadamard()),
     )
-    return ann_store.load_ivfadc(path).search_embeddings(
-        queries_raw, k=3, nprobe=2
+    return ann_store.search(
+        [path], _queries(load(spark, sf_dir, "embeddings")), k=3, nprobe=2
     )
 
 
-def _ivfadc_rot_ctes() -> str:
-    """The ``_IVFADC_CTES`` training/search chain re-sourced from the
-    Hadamard-rotated stream: ``ur`` rotates the unnested (vec_id, e, i)
-    rows — ``e'(c) = Σᵢ e(i)·(−1)^popcount(c AND i)``, exact BIGINTs —
-    and every consumer of ``u`` reads ``ur`` instead."""
-    import re
-
-    rot = re.sub(r"\bFROM u\b", "FROM ur", _IVFADC_CTES)
-    ur = """), ur AS (
+# the Hadamard-rotated stream of the IVFADC oracle chains: ``ur``
+# rotates the unnested (vec_id, e, i) rows —
+# ``e'(c) = Σᵢ e(i)·(−1)^popcount(c AND i)``, exact BIGINTs
+_UR_CTE = """), ur AS (
   SELECT a.vec_id,
          SUM(a.e * CASE WHEN bit_count(CAST(oc.c AS BIGINT) & a.i) % 2 = 0
                         THEN 1 ELSE -1 END) AS e,
@@ -3710,40 +3698,32 @@ def _ivfadc_rot_ctes() -> str:
   FROM u a, (SELECT unnest(range(64)) AS c) oc
   GROUP BY a.vec_id, oc.c
 ), co AS ("""
-    return rot.replace("), co AS (", ur, 1)
+
+
+def _rotated_stream(chain: str) -> str:
+    """An ``_IVFADC_CTES``-based chain re-sourced from the rotated
+    stream: ``ur`` is inserted before ``co`` and every consumer of
+    ``u`` reads ``ur`` instead."""
+    import re
+
+    return re.sub(r"\bFROM u\b", "FROM ur", chain).replace(
+        "), co AS (", _UR_CTE, 1
+    )
 
 
 SIM_IVFADC_ROTATED_SQL = (
-    _ivfadc_rot_ctes().rstrip() + _IVFADC_SEARCH_CTES.format(where="")
+    _rotated_stream(_IVFADC_CTES).rstrip()
+    + _IVFADC_SEARCH_CTES.format(where="")
 )
 
 
-def _ensure_deleted_store(spark: SparkSession, sf_dir: str) -> str:
-    """The tombstoned store variant: the base pipeline in its own
-    directory with ``vec_id % 7 = 3`` soft-deleted
-    (:func:`~..extensions.ann_store.delete_vectors`) as part of the
-    build — the fingerprint commits AFTER the delete, so a fresh
-    session sees build+delete as one unit."""
-    from ..extensions import ann_store
-
-    path = _session_store_path(sf_dir, "del")
-    fpr = _ivfadc_store_fingerprint(sf_dir, variant="tombstoned-mod7")
-    if not _session_store_fresh(path, fpr):
-        with _build_lock(path):
-            if not _session_store_fresh(path, fpr):
-                coarse, _, corpus, coarse_rows, cb = _ivfadc_parts(
-                    spark, sf_dir, iters=1
-                )
-                ann_store.save_ivfadc(
-                    similarity.ivf_pq_index(
-                        corpus, coarse, cb, m=4, dim=64, residual=True,
-                        coarse_rows=coarse_rows,
-                    ),
-                    path, coarse_rows, cb, m=4, dim=64,
-                )
-                ann_store.delete_vectors(spark, path, "vec_id % 7 = 3")
-                _commit_store_fingerprint(path, fpr)
-    return path
+def _build_deleted(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The tombstoned store variant: the base build with ``vec_id % 7 =
+    3`` soft-deleted (:func:`~..extensions.ann_store.delete_vectors`)
+    — the fingerprint commits AFTER the delete, so a fresh session
+    sees build+delete as one unit."""
+    _build_store(spark, sf_dir, path)
+    ann_store.delete_vectors(spark, path, "vec_id % 7 = 3")
 
 
 def sim_ivfadc_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3757,13 +3737,12 @@ def sim_ivfadc_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     exclusion commutes with scoring — the oracle's spelling).  The
     physical purge half (``compact_deleted``, rebalance fold-in) is
     covered by tests; this row pins the search-visible semantics."""
-    from ..extensions import ann_store
-
-    path = _ensure_deleted_store(spark, sf_dir)
-    queries = similarity.prepare(load(spark, sf_dir, "embeddings")).filter(
-        (F.col("vec_id") >= 12) & (F.col("vec_id") < 28)
+    path = _session_store(
+        spark, sf_dir, "del", "tombstoned-mod7", _build_deleted
     )
-    return ann_store.load_ivfadc(path).search(queries, k=3, nprobe=2)
+    return ann_store.search(
+        [path], _queries(load(spark, sf_dir, "embeddings")), k=3, nprobe=2
+    )
 
 
 SIM_IVFADC_DELETED_SQL = _IVFADC_CTES.rstrip() + _IVFADC_SEARCH_CTES.format(
@@ -3780,15 +3759,10 @@ def sim_ivfadc_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     selectivities instead of decaying with the filter.  Same
     session-scoped base store as the other hybrid rows; the oracle
     mirrors the per-query cumulative walk declaratively."""
-    from ..extensions import ann_store
-
-    path = _ensure_base_store(spark, sf_dir)
-    queries = similarity.prepare(load(spark, sf_dir, "embeddings")).filter(
-        (F.col("vec_id") >= 12) & (F.col("vec_id") < 28)
-    )
-    return ann_store.load_ivfadc(path).search(
-        queries, k=3, nprobe=1, where="vec_id % 3 = 1",
-        target_candidates=60,
+    return ann_store.search(
+        [_ensure_base_store(spark, sf_dir)],
+        _queries(load(spark, sf_dir, "embeddings")),
+        k=3, nprobe=1, where="vec_id % 3 = 1", target_candidates=60,
     )
 
 
@@ -3829,7 +3803,7 @@ SIM_IVFADC_ADAPTIVE_SQL = _IVFADC_CTES.rstrip() + _IVFADC_SEARCH_CTES.format(
 
 # --- multi-segment search (round 12) ---------------------------------------
 # Two segments with DIFFERENT models and DIFFERENT bases, searched as
-# one index (ann_store.search_segments — the frozen-base + fresh-
+# one index (multi-path ann_store.search — the frozen-base + fresh-
 # admission posture rebalance_ivfadc's contract creates):
 #   segment A: raw basis,      coarse = rows  8-10, corpus = even ids ≥ 28
 #   segment B: Hadamard basis, coarse = rows 10-12, corpus = odd  ids ≥ 28
@@ -3863,16 +3837,7 @@ def _ivfadc_scored_chain(
         "\nSELECT query_id,"
     )[0]
     if rotated:
-        chain = re.sub(r"\bFROM u\b", "FROM ur", chain)
-        ur = """), ur AS (
-  SELECT a.vec_id,
-         SUM(a.e * CASE WHEN bit_count(CAST(oc.c AS BIGINT) & a.i) % 2 = 0
-                        THEN 1 ELSE -1 END) AS e,
-         oc.c AS i
-  FROM u a, (SELECT unnest(range(64)) AS c) oc
-  GROUP BY a.vec_id, oc.c
-), co AS ("""
-        chain = chain.replace("), co AS (", ur, 1)
+        chain = _rotated_stream(chain)
     chain = chain.replace("vec_id >= 8 AND vec_id < 12", coarse_pred)
     chain = chain.replace("WHERE vec_id >= 28", f"WHERE {corpus_pred}")
     chain = chain.replace(
@@ -3883,67 +3848,29 @@ def _ivfadc_scored_chain(
     return chain
 
 
-def _ivfadc_seg_parts(spark: SparkSession, sf_dir: str, seg: str):
-    """Per-segment training chain (same stated plan-build exception as
-    ``_ivfadc_parts``): segment ``a`` in the raw basis, segment ``b``
-    in the Hadamard basis with the rotation spec for its sidecar."""
-    emb = load(spark, sf_dir, "embeddings")
-    if seg == "a":
-        base = similarity.prepare(emb)
-        lo, hi, parity, rotation = 8, 10, 0, None
-    else:
-        base = similarity.rotate_quantized(similarity.prepare(emb), _had64())
-        lo, hi, parity = 10, 12, 1
-        rotation = {"mode": "post_int", "components": _had64()}
-    coarse = base.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
-    corpus = base.filter(
-        (F.col("vec_id") >= 28) & (F.col("vec_id") % 2 == parity)
-    )
-    coarse_rows = [
-        (int(r["vec_id"]), [int(v) for v in r["q"]])
-        for r in coarse.select("vec_id", "q").collect()
+def _segment_stores(spark: SparkSession, sf_dir: str) -> list[str]:
+    """The two segment stores: ``a`` in the raw basis (coarse rows
+    8–10, even corpus ids), ``b`` in the Hadamard basis (coarse rows
+    10–12, odd ids), each with its own trained codebook."""
+    return [
+        _session_store(
+            spark, sf_dir, f"seg{seg}", f"segment-{seg}",
+            functools.partial(
+                _build_store, rotation=rot, lists=lists, parity=parity
+            ),
+        )
+        for seg, rot, lists, parity in (
+            ("a", None, (8, 10), 0),
+            ("b", _hadamard(), (10, 12), 1),
+        )
     ]
-    # window spelling on the training input, both bases (r13 A/B): the
-    # literal fold re-inlines the per-element q expression into every
-    # training-job evaluation (see _ivfadc_parts — 3.2 s → 27.7 s; in
-    # the rotated basis it detonates outright, see _ivfadc_rot_parts)
-    residuals = similarity.residualize(
-        similarity.ivf_assign(corpus, coarse, 1, None), coarse_rows
-    )
-    cb = similarity.pq_train_codebooks(residuals, k=8, m=4, dim=64, iters=1)
-    return coarse, corpus, coarse_rows, cb, rotation
-
-
-def _ensure_segment_store(spark: SparkSession, sf_dir: str, seg: str) -> str:
-    from ..extensions import ann_store
-
-    path = _session_store_path(sf_dir, f"seg{seg}")
-    fpr = _ivfadc_store_fingerprint(sf_dir, variant=f"segment-{seg}")
-    if not _session_store_fresh(path, fpr):
-        with _build_lock(path):
-            if not _session_store_fresh(path, fpr):
-                coarse, corpus, coarse_rows, cb, rotation = _ivfadc_seg_parts(
-                    spark, sf_dir, seg
-                )
-                ann_store.save_ivfadc(
-                    # literal-fold assignment only in the raw basis (seg
-                    # a) — see _ivfadc_seg_parts for the rotated-basis
-                    # rationale
-                    similarity.ivf_pq_index(
-                        corpus, coarse, cb, m=4, dim=64, residual=True,
-                        coarse_rows=coarse_rows if rotation is None else None,
-                    ),
-                    path, coarse_rows, cb, m=4, dim=64, rotation=rotation,
-                )
-                _commit_store_fingerprint(path, fpr)
-    return path
 
 
 def sim_ivfadc_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-segment ANN search — TWO stored indexes with different
     coarse quantizers, different trained codebooks, and DIFFERENT
     bases (raw + Hadamard-rotated) searched as one
-    (:func:`~..extensions.ann_store.search_segments`): each segment
+    (multi-path :func:`~..extensions.ann_store.search`): each segment
     ranks its own lists with its own coarse, rotates the raw queries
     by its own sidecar, scores its own codes, and one global top-3
     merges the slates.  This is the steady-state posture
@@ -3951,15 +3878,9 @@ def sim_ivfadc_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     admission segment — made a real searchable operator.  Same
     session-scoped build-once discipline as the other store rows: the
     timed body is two loads + the merged search."""
-    from ..extensions import ann_store
-
-    pa = _ensure_segment_store(spark, sf_dir, "a")
-    pb = _ensure_segment_store(spark, sf_dir, "b")
-    queries_raw = load(spark, sf_dir, "embeddings").filter(
-        (F.col("vec_id") >= 12) & (F.col("vec_id") < 28)
-    )
-    return ann_store.search_segments(
-        spark, [pa, pb], queries_raw, k=3, nprobe=1
+    return ann_store.search(
+        _segment_stores(spark, sf_dir),
+        _queries(load(spark, sf_dir, "embeddings")), k=3, nprobe=1,
     )
 
 
@@ -4004,22 +3925,16 @@ def sim_ivfadc_segments_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     with reconstructed cosine >= 0.2, no rank) asked of the SAME
     mixed-model mixed-basis two-segment set as
     ``ext_sim_ivfadc_segments``
-    (:func:`~..extensions.ann_store.range_search_segments`).  Each
+    (multi-path :func:`~..extensions.ann_store.range_search`).  Each
     segment answers with its own coarse/rotation/codebook and the
     merge is lighter than top-k's: per-segment thresholding commutes
     with the max-per-(query, neighbor) dedup, and there is NO global
     rank window — the only merge exchange is the dedup groupBy on
     already-thresholded rows.  The oracle runs both training+search
     chains and thresholds the merged MAX instead of ranking it."""
-    from ..extensions import ann_store
-
-    pa = _ensure_segment_store(spark, sf_dir, "a")
-    pb = _ensure_segment_store(spark, sf_dir, "b")
-    queries_raw = load(spark, sf_dir, "embeddings").filter(
-        (F.col("vec_id") >= 12) & (F.col("vec_id") < 28)
-    )
-    return ann_store.range_search_segments(
-        spark, [pa, pb], queries_raw, 0.2, nprobe=1
+    return ann_store.range_search(
+        _segment_stores(spark, sf_dir),
+        _queries(load(spark, sf_dir, "embeddings")), 0.2, nprobe=1,
     )
 
 
@@ -4035,12 +3950,12 @@ WHERE cosine_adc >= 0.2
 # --- segment merge + maintenance + unfiltered budget (round 13) -----------
 
 
-def _ensure_merged_store(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once for the MERGED store: the full segment lifecycle run
-    as one unit — base segment (even corpus ids, standard full-corpus
-    model) with ``vec_id % 10 = 4`` tombstoned, fresh segment (odd ids
-    PLUS the re-admitted % 10 = 4 ids and the still-live % 10 = 6
-    overlap ids, same model — the admission norm), then
+def _build_merged(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The MERGED store: the full segment lifecycle run as one unit —
+    base segment (even corpus ids, standard full-corpus model) with
+    ``vec_id % 10 = 4`` tombstoned, fresh segment (odd ids PLUS the
+    re-admitted % 10 = 4 ids and the still-live % 10 = 6 overlap ids,
+    same model — the admission norm), then
     :func:`~..extensions.ann_store.merge_segments` folds them into one
     store.  Every resolution rule fires on the way: the base's stale
     tombstoned copies drop, the re-admitted fresh copies win
@@ -4050,41 +3965,28 @@ def _ensure_merged_store(spark: SparkSession, sf_dir: str) -> str:
     shared model, which is what makes the search hash-checkable
     against the plain single-store oracle.  The fingerprint commits
     only after the merge (crash → rebuild)."""
-    from ..extensions import ann_store
+    _, coarse, corpus, coarse_rows, cb = _ivfadc_train(spark, sf_dir)
+    even = corpus.filter(F.col("vec_id") % 2 == 0)
+    readmit = corpus.filter(F.col("vec_id") % 10 == 4)
+    overlap = corpus.filter(F.col("vec_id") % 10 == 6)
+    fresh_rows = corpus.filter(
+        F.col("vec_id") % 2 == 1
+    ).unionByName(readmit).unionByName(overlap)
+    base_p, fresh_p = path + "_base", path + "_fresh"
 
-    path = _session_store_path(sf_dir, "mrg")
-    fpr = _ivfadc_store_fingerprint(sf_dir, variant="merged-lifecycle")
-    if not _session_store_fresh(path, fpr):
-        with _build_lock(path):
-            if not _session_store_fresh(path, fpr):
-                coarse, _, corpus, coarse_rows, cb = _ivfadc_parts(
-                    spark, sf_dir, iters=1
-                )
-                even = corpus.filter(F.col("vec_id") % 2 == 0)
-                readmit = corpus.filter(F.col("vec_id") % 10 == 4)
-                overlap = corpus.filter(F.col("vec_id") % 10 == 6)
-                fresh_rows = corpus.filter(
-                    F.col("vec_id") % 2 == 1
-                ).unionByName(readmit).unionByName(overlap)
-                base_p, fresh_p = path + "_base", path + "_fresh"
-                ann_store.save_ivfadc(
-                    similarity.ivf_pq_index(
-                        even, coarse, cb, m=4, dim=64, residual=True,
-                        coarse_rows=coarse_rows,
-                    ),
-                    base_p, coarse_rows, cb, m=4, dim=64,
-                )
-                ann_store.delete_vectors(spark, base_p, "vec_id % 10 = 4")
-                ann_store.save_ivfadc(
-                    similarity.ivf_pq_index(
-                        fresh_rows, coarse, cb, m=4, dim=64, residual=True,
-                        coarse_rows=coarse_rows,
-                    ),
-                    fresh_p, coarse_rows, cb, m=4, dim=64,
-                )
-                ann_store.merge_segments(spark, [base_p, fresh_p], path)
-                _commit_store_fingerprint(path, fpr)
-    return path
+    def save(rows_: DataFrame, p: str) -> None:
+        ann_store.save_ivfadc(
+            similarity.ivf_pq_index(
+                rows_, coarse, cb, m=4, dim=64, residual=True,
+                coarse_rows=coarse_rows,
+            ),
+            p, coarse_rows, cb, m=4, dim=64,
+        )
+
+    save(even, base_p)
+    ann_store.delete_vectors(spark, base_p, "vec_id % 10 = 4")
+    save(fresh_rows, fresh_p)
+    ann_store.merge_segments(spark, [base_p, fresh_p], path)
 
 
 def sim_ivfadc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4101,51 +4003,29 @@ def sim_ivfadc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost (the 1M probe pins the cost reversion in SCALE_PROBE.json).
     Session-scoped build discipline: the timed body is load +
     search."""
-    from ..extensions import ann_store
-
-    path = _ensure_merged_store(spark, sf_dir)
-    queries = similarity.prepare(load(spark, sf_dir, "embeddings")).filter(
-        (F.col("vec_id") >= 12) & (F.col("vec_id") < 28)
+    path = _session_store(
+        spark, sf_dir, "mrg", "merged-lifecycle", _build_merged
     )
-    return ann_store.load_ivfadc(path).search(queries, k=3, nprobe=2)
+    return ann_store.search(
+        [path], _queries(load(spark, sf_dir, "embeddings")), k=3, nprobe=2
+    )
 
 
 # merged-search ≡ single-index search over the full corpus (see
-# _ensure_merged_store for why that identity is the merge's contract)
+# _build_merged for why that identity is the merge's contract)
 SIM_IVFADC_MERGE_SQL = SIM_IVFADC_TOPK_SQL
 
 
-def _ensure_maintained_store(spark: SparkSession, sf_dir: str) -> str:
-    """The tombstoned store variant PURGED: same build + ``vec_id % 7
-    = 3`` soft-delete as ``_ensure_deleted_store``, then
-    :func:`~..extensions.ann_store.compact_deleted` physically drops
-    the rows through the staged swap — build, delete, and purge commit
-    as one fingerprinted unit."""
-    from ..extensions import ann_store
-
-    path = _session_store_path(sf_dir, "mnt")
-    fpr = _ivfadc_store_fingerprint(sf_dir, variant="maintained-mod7")
-    if not _session_store_fresh(path, fpr):
-        with _build_lock(path):
-            if not _session_store_fresh(path, fpr):
-                coarse, _, corpus, coarse_rows, cb = _ivfadc_parts(
-                    spark, sf_dir, iters=1
-                )
-                ann_store.save_ivfadc(
-                    similarity.ivf_pq_index(
-                        corpus, coarse, cb, m=4, dim=64, residual=True,
-                        coarse_rows=coarse_rows,
-                    ),
-                    path, coarse_rows, cb, m=4, dim=64,
-                )
-                ann_store.delete_vectors(spark, path, "vec_id % 7 = 3")
-                rep = ann_store.compact_deleted(spark, path)
-                if not rep["compacted"]:  # pragma: no cover - build guard
-                    raise RuntimeError(
-                        "maintenance store build: nothing purged"
-                    )
-                _commit_store_fingerprint(path, fpr)
-    return path
+def _build_maintained(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The tombstoned store variant PURGED: the ``_build_deleted``
+    build, then :func:`~..extensions.ann_store.compact_deleted`
+    physically drops the rows through the staged swap — build, delete,
+    and purge commit as one fingerprinted unit."""
+    _build_deleted(spark, sf_dir, path)
+    if not ann_store.compact_deleted(spark, path)["compacted"]:
+        raise RuntimeError(  # pragma: no cover - build guard
+            "maintenance store build: nothing purged"
+        )
 
 
 def sim_ivfadc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4161,13 +4041,12 @@ def sim_ivfadc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     leisure because search results never depend on WHICH of the two
     states the store is in.  (The rebalance fold-in purge is pinned by
     tests and the 1M lifecycle probe.)"""
-    from ..extensions import ann_store
-
-    path = _ensure_maintained_store(spark, sf_dir)
-    queries = similarity.prepare(load(spark, sf_dir, "embeddings")).filter(
-        (F.col("vec_id") >= 12) & (F.col("vec_id") < 28)
+    path = _session_store(
+        spark, sf_dir, "mnt", "maintained-mod7", _build_maintained
     )
-    return ann_store.load_ivfadc(path).search(queries, k=3, nprobe=2)
+    return ann_store.search(
+        [path], _queries(load(spark, sf_dir, "embeddings")), k=3, nprobe=2
+    )
 
 
 SIM_IVFADC_MAINTENANCE_SQL = SIM_IVFADC_DELETED_SQL
@@ -4184,14 +4063,9 @@ def sim_ivfadc_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero exchanges over the probe join.  Same session-scoped base
     store; the oracle is the shared scoring chain with the threshold
     predicate in place of the rank qualifier."""
-    from ..extensions import ann_store
-
-    path = _ensure_base_store(spark, sf_dir)
-    queries = similarity.prepare(load(spark, sf_dir, "embeddings")).filter(
-        (F.col("vec_id") >= 12) & (F.col("vec_id") < 28)
-    )
-    return ann_store.load_ivfadc(path).range_search(
-        queries, 0.2, nprobe=2
+    return ann_store.range_search(
+        [_ensure_base_store(spark, sf_dir)],
+        _queries(load(spark, sf_dir, "embeddings")), 0.2, nprobe=2,
     )
 
 
@@ -4217,14 +4091,10 @@ def sim_ivfadc_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     as list occupancy skews, where a fixed nprobe scans 10× different
     byte counts across queries.  Same session-scoped base store; the
     oracle mirrors the cumulative walk over plain list sizes."""
-    from ..extensions import ann_store
-
-    path = _ensure_base_store(spark, sf_dir)
-    queries = similarity.prepare(load(spark, sf_dir, "embeddings")).filter(
-        (F.col("vec_id") >= 12) & (F.col("vec_id") < 28)
-    )
-    return ann_store.load_ivfadc(path).search(
-        queries, k=3, nprobe=1, target_candidates=800
+    return ann_store.search(
+        [_ensure_base_store(spark, sf_dir)],
+        _queries(load(spark, sf_dir, "embeddings")),
+        k=3, nprobe=1, target_candidates=800,
     )
 
 

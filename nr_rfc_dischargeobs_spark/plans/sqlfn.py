@@ -507,7 +507,7 @@ def _ivfadc_search_tvf_sql(
       left-to-right IEEE fold the operator runs, NOT a GROUP BY sum
       whose partition-dependent addition order could flip a rank in
       the last ulp.  That determinism is what un-refuses the float
-      tier from SQL; parity with ``search_embeddings`` is pinned
+      tier from SQL; parity with ``ann_store.search`` is pinned
       bit-identical in tests.  The matrix rides as ~dim² double
       literals analyzed once at CREATE time (model-parameter scale)."""
     if rotation is None:
@@ -662,7 +662,7 @@ def register_ivfadc_range_tvf(
 ) -> str:
     """Register ``tvf_ivfadc_range(query_lo, query_hi, tau, nprobe)``
     over a stored artifact — the pure-SQL spelling of
-    :func:`~..extensions.ann_store.IvfadcIndex.range_search` (FAISS
+    :func:`~..extensions.ann_store.range_search` (FAISS
     ``range_search``): every probed neighbor scoring ≥ the RUNTIME
     threshold ``tau``, no rank window.  Delegates view
     materialization (store + model + rotation + tombstones + optional
@@ -755,7 +755,7 @@ def register_ivfadc_search_tvf(
         store = store.filter(where)
     # operator ≡ TVF parity extends to tombstones: deleted vectors are
     # excluded from the candidate set here exactly as
-    # IvfadcIndex.search anti-joins them (ann_store.delete_vectors)
+    # ann_store.search anti-joins them (ann_store.delete_vectors)
     dele = ann_store.deleted_ids(spark, index_path)
     if dele is not None:
         store = store.join(F.broadcast(dele), "vec_id", "left_anti")
@@ -806,7 +806,7 @@ def register_ivfadc_search_tvf(
     return "tvf_ivfadc_search"
 
 
-# Multi-segment search from pure SQL — ann_store.search_segments' twin.
+# Multi-segment search from pure SQL — multi-path ann_store.search's twin.
 # Each segment gets its own store/model views and its own copy of the
 # single-store probe+score chain (CTE names suffixed _s{i}, view names
 # per segment), then one slate-scale merge: max-per-(query, neighbor)
@@ -828,7 +828,7 @@ def _segment_scored_chain(
     re-addressed to segment ``i``'s views and suffixed CTE names.
     ``target_candidates`` swaps in the adaptive probe block, reading
     segment ``i``'s OWN counts view (each segment budgets its walk
-    against its own list occupancies, exactly as ``search_segments``
+    against its own list occupancies, exactly as ``ann_store.search``
     threads the dial per segment)."""
     import re
 
@@ -859,7 +859,7 @@ def register_ivfadc_segments_tvf(
 ) -> str:
     """Register ``tvf_ivfadc_segments_search(query_lo, query_hi, k,
     nprobe)`` over SEVERAL stored artifacts — the pure-SQL spelling of
-    :func:`~..extensions.ann_store.search_segments`: each segment's
+    multi-path :func:`~..extensions.ann_store.search`: each segment's
     model sidecar becomes its own view set, each segment's chain
     probes its own coarse, applies its own rotation (post_int via the
     rotation view in exact BIGINTs; ``pre`` float models via the
@@ -870,8 +870,8 @@ def register_ivfadc_segments_tvf(
     refused loudly otherwise, same as the operator.
 
     ALL THREE hybrid dials thread through per segment, exactly as
-    :func:`~..extensions.ann_store.search_segments` passes them to
-    each :meth:`~..extensions.ann_store.IvfadcIndex.search`: ``where``
+    :func:`~..extensions.ann_store.search` passes them to each
+    segment's ``ivfadc_topk``: ``where``
     pre-filters every segment's store view (parquet-pushed);
     ``probe_matching_only`` restricts each segment's coarse view to
     ITS OWN matched lists (each segment computes its own matched set
@@ -885,7 +885,7 @@ def register_ivfadc_segments_tvf(
 
     Also registers ``tvf_ivfadc_segments_range(query_lo, query_hi,
     tau, nprobe)`` over the same views — the pure-SQL spelling of
-    :func:`~..extensions.ann_store.range_search_segments` (the rank
+    multi-path :func:`~..extensions.ann_store.range_search` (the rank
     tail replaced by the runtime threshold on the merged max), the
     same way the single-store range TVF rides the search TVF's
     registration.  Both TVFs snapshot tombstones at registration —
@@ -1005,7 +1005,7 @@ def register_ivfadc_segments_tvf(
     spark.sql(body)
     # the range twin rides the SAME registration (same views, same
     # per-segment chains): the rank tail is replaced by the runtime
-    # threshold — the pure-SQL spelling of range_search_segments, with
+    # threshold — the pure-SQL spelling of multi-path range_search, with
     # per-segment thresholding folded into the post-merge predicate
     # (equivalent, since any copy >= tau implies the max is)
     spark.sql(

@@ -147,8 +147,8 @@ def tombstone_stream(
 
     Visibility contract, per surface — stated precisely because the
     GDPR clock cares: the OPERATOR surfaces
-    (:meth:`~..extensions.ann_store.IvfadcIndex.search`,
-    :func:`~..extensions.ann_store.search_segments`) resolve the side
+    (:func:`~..extensions.ann_store.search`,
+    :func:`~..extensions.ann_store.range_search`) resolve the side
     table per search call, so streamed deletions stop ranking there
     within one trigger interval.  The SQL TVFs
     (``register_ivfadc_search_tvf`` / ``register_ivfadc_segments_tvf``)

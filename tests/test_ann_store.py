@@ -9,13 +9,22 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import SF_SMOKE
 from nr_rfc_dischargeobs_spark.extensions import ann_store, similarity
+
+_EMB = f"{SF_SMOKE}/embeddings.parquet"
+
+
+def _raw_queries(spark):
+    """The raw (vec_id, embedding) rows _trained_parts' queries are
+    prepared from — what ann_store.search takes."""
+    return spark.read.parquet(_EMB).filter(
+        (F.col("vec_id") >= 12) & (F.col("vec_id") < 28)
+    )
 
 
 def _trained_parts(spark):
-    emb = similarity.prepare(
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    )
+    emb = similarity.prepare(spark.read.parquet(_EMB))
     coarse = emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 12))
     queries = emb.filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
     corpus = emb.filter(F.col("vec_id") >= 28)
@@ -45,17 +54,15 @@ def test_save_load_search_round_trip(spark, tmp_path):
     ).collect()))
     ix.unpersist()
 
-    # search via the handle save_ivfadc returned...
-    got_handle = sorted(map(tuple, handle.search(queries, k=3, nprobe=2)
-                            .collect()))
-    # ...and via a cold load that reconstructs the model from disk only
+    # a cold load reconstructs the model from disk only — the same
+    # model save_ivfadc handed back — and search runs on that load
     loaded = ann_store.load_ivfadc(path)
+    assert loaded == handle
     assert loaded.m == 4 and loaded.dim == 64
     assert loaded.coarse_rows == coarse_rows
     assert loaded.centroid_rows == cb
-    got_cold = sorted(map(tuple, loaded.search(queries, k=3, nprobe=2)
-                          .collect()))
-    assert got_handle == want
+    got_cold = sorted(map(tuple, ann_store.search(
+        [path], _raw_queries(spark), k=3, nprobe=2).collect()))
     assert got_cold == want
     # the table itself stays a plain parquet reader's artifact: the
     # sidecar must not break a direct scan, and list_id must be a
@@ -150,14 +157,12 @@ def test_streamed_index_becomes_loadable_artifact(spark, tmp_path):
     loaded = ann_store.load_ivfadc(index_dir)
     assert loaded.m == 2 and loaded.coarse_rows == coarse_rows
 
-    queries = similarity.prepare(
-        spark.createDataFrame(
-            [(100, [0.35] * 4), (101, [0.05] * 4)],
-            ["vec_id", "embedding"],
-        )
+    raw = spark.createDataFrame(
+        [(100, [0.35] * 4), (101, [0.05] * 4)], ["vec_id", "embedding"]
     )
-    got = sorted(map(tuple, loaded.search(queries, k=2, nprobe=1)
-                     .collect()))
+    queries = similarity.prepare(raw)
+    got = sorted(map(tuple, ann_store.search([index_dir], raw, k=2,
+                                             nprobe=1).collect()))
     want = sorted(map(tuple, similarity.ivfadc_topk(
         queries, read_ivfadc_index(spark, index_dir),
         loaded.coarse_frame(spark), cb, k=2, nprobe=1, m=2, dim=4,
@@ -187,7 +192,7 @@ def test_store_topk_builds_once_per_fingerprint(spark, monkeypatch):
 
     # stale fingerprint (input/recipe changed) → rebuild path re-engages
     monkeypatch.setattr(
-        plx, "_ivfadc_store_fingerprint", lambda d: "different"
+        plx, "_ivfadc_store_fingerprint", lambda *a: "different"
     )
     try:
         plx.sim_ivfadc_store_topk(spark, sf).collect()
@@ -196,10 +201,35 @@ def test_store_topk_builds_once_per_fingerprint(spark, monkeypatch):
         assert "save_ivfadc called" in str(ex)
 
 
+def test_session_store_key_normalizes_sf_dir(spark, tmp_path, monkeypatch):
+    """``dir`` and ``dir/`` name one session store: a build through
+    ``dir/`` after one through ``dir`` reuses the first store instead
+    of training a second copy."""
+    import tempfile
+
+    import nr_rfc_dischargeobs_spark.plans.extensions as plx
+
+    (tmp_path / "tmp").mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    builds = []
+
+    def build(_spark, sf_dir, path):
+        builds.append(sf_dir)
+        os.makedirs(path)
+
+    first = plx._session_store(spark, str(sf), "probe", "base", build)
+    again = plx._session_store(spark, str(sf) + "/", "probe", "base", build)
+    assert again == first
+    assert builds == [str(sf)]
+
+
 def test_rotated_artifact_round_trip_and_versioning(spark, tmp_path):
     """A rotated artifact carries its rotation in the v2 sidecar; a
-    fresh load must rotate raw queries itself (search_embeddings ==
-    search over hand-rotated queries), and the validation guards
+    fresh load must rotate raw queries itself (ann_store.search ==
+    ivfadc_topk over hand-rotated queries on the loaded frame), and
+    the validation guards
     refuse malformed specs and corrupt version-2 sidecars."""
     import json
     import os
@@ -236,10 +266,13 @@ def test_rotated_artifact_round_trip_and_versioning(spark, tmp_path):
 
     loaded = ann_store.load_ivfadc(path)
     queries_raw = emb.filter(F.col("vec_id").between(2, 5))
-    got = sorted(map(tuple, loaded.search_embeddings(
-        queries_raw, k=2, nprobe=2).collect()))
+    got = sorted(map(tuple, ann_store.search(
+        [path], queries_raw, k=2, nprobe=2).collect()))
     by_hand = similarity.rotate_quantized(similarity.prepare(queries_raw), h)
-    want = sorted(map(tuple, loaded.search(by_hand, k=2, nprobe=2).collect()))
+    want = sorted(map(tuple, similarity.ivfadc_topk(
+        by_hand, loaded.frame(spark), loaded.coarse_frame(spark),
+        loaded.centroid_rows, k=2, nprobe=2, m=2, dim=4,
+    ).collect()))
     assert got == want and got
 
     # guards: bad mode, float matrix in post_int, corrupt v2 sidecar
@@ -264,8 +297,9 @@ def test_rotated_artifact_round_trip_and_versioning(spark, tmp_path):
 
 def test_pre_mode_rotation_search_embeddings(spark, tmp_path):
     """mode='pre' (a float OPQ/PCA model) round-trips through the
-    sidecar too: search_embeddings equals searching hand-projected
-    queries — the trained-rotation production path."""
+    sidecar too: ann_store.search equals ivfadc_topk over
+    hand-projected queries on the loaded frame — the trained-rotation
+    production path."""
     import numpy as np
 
     from nr_rfc_dischargeobs_spark.extensions import ann_store
@@ -297,10 +331,12 @@ def test_pre_mode_rotation_search_embeddings(spark, tmp_path):
                           rotation=model)
     loaded = ann_store.load_ivfadc(path)
     queries_raw = emb.filter(F.col("vec_id").between(2, 5))
-    got = sorted(map(tuple, loaded.search_embeddings(
-        queries_raw, k=2, nprobe=2).collect()))
-    want = sorted(map(tuple, loaded.search(
-        similarity.rotate_prepare(queries_raw, model), k=2, nprobe=2
+    got = sorted(map(tuple, ann_store.search(
+        [path], queries_raw, k=2, nprobe=2).collect()))
+    want = sorted(map(tuple, similarity.ivfadc_topk(
+        similarity.rotate_prepare(queries_raw, model), loaded.frame(spark),
+        loaded.coarse_frame(spark), loaded.centroid_rows,
+        k=2, nprobe=2, m=2, dim=4,
     ).collect()))
     assert got == want and got
 
@@ -310,7 +346,7 @@ def test_streamed_rotated_admission_matches_batch_build(spark, tmp_path):
     index's basis: the streamed code rows equal the batch
     ivf_pq_index build over the same (rotated) vectors, and after
     write_ivfadc_model(rotation=…) the store is a loadable ROTATED
-    artifact whose search_embeddings answers raw-basis queries."""
+    artifact whose search answers raw-basis queries."""
     import json as _json
 
     from nr_rfc_dischargeobs_spark.streaming import (
@@ -377,8 +413,8 @@ def test_streamed_rotated_admission_matches_batch_build(spark, tmp_path):
     )
     loaded = ann_store.load_ivfadc(index_dir)
     assert loaded.rotation == ann_store._check_rotation(rot)
-    got = loaded.search_embeddings(
-        emb.filter(F.col("vec_id") <= 2), k=2, nprobe=1
+    got = ann_store.search(
+        [index_dir], emb.filter(F.col("vec_id") <= 2), k=2, nprobe=1
     ).collect()
     assert got  # raw-basis queries answered through the sidecar rotation
 
@@ -419,7 +455,7 @@ def test_rebalance_preserves_rotation(spark, tmp_path):
     assert rep["rebalanced"] is True
     loaded = ann_store.load_ivfadc(path)
     assert loaded.rotation == ann_store._check_rotation(rot)
-    assert loaded.search_embeddings(emb.limit(3), k=2, nprobe=2).collect()
+    assert ann_store.search([path], emb.limit(3), k=2, nprobe=2).collect()
 
 
 def test_rebalance_compacts_streamed_layout(spark, tmp_path):
@@ -477,8 +513,9 @@ def test_rebalance_compacts_streamed_layout(spark, tmp_path):
     assert rep["rebalanced"] is True and rep["kept"] == 12
     swept = spark.read.parquet(index_dir)
     assert "batch_id" not in swept.columns  # history compacted away
-    loaded = ann_store.load_ivfadc(index_dir)
-    assert loaded.search(prep.limit(2), k=2, nprobe=2).collect()
+    assert ann_store.search(
+        [index_dir], emb.limit(2), k=2, nprobe=2
+    ).collect()
 
     # a further batch write into the swept tree breaks discovery — the
     # documented reason admission must resume in a fresh directory
@@ -520,14 +557,13 @@ def test_search_segments_parity_with_merged_index(spark, tmp_path):
         paths.append(p)
     pa, pb, pall = paths
 
-    emb_q = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
-    got = sorted(map(tuple, ann_store.search_segments(
-        spark, [pa, pb], emb_q, k=3, nprobe=2
+    emb_q = _raw_queries(spark)
+    got = sorted(map(tuple, ann_store.search(
+        [pa, pb], emb_q, k=3, nprobe=2
     ).collect()))
-    want = sorted(map(tuple, ann_store.load_ivfadc(pall)
-                      .search_embeddings(emb_q, k=3, nprobe=2).collect()))
+    want = sorted(map(tuple, ann_store.search(
+        [pall], emb_q, k=3, nprobe=2
+    ).collect()))
     assert got == want and len(got) > 0
 
 
@@ -568,12 +604,12 @@ def test_search_segments_mixed_bases_and_tombstones(spark, tmp_path):
 
     # tombstone one segment: a deleted vector disappears from the merge
     emb_q = emb.filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
-    first = ann_store.search_segments(spark, [pa, pb], emb_q, k=3, nprobe=1)
+    first = ann_store.search([pa, pb], emb_q, k=3, nprobe=1)
     victim = int(first.orderBy("query_id", "rank").first()["neighbor_id"])
     assert ann_store.delete_vectors(spark, pa, f"vec_id = {victim}") + \
         ann_store.delete_vectors(spark, pb, f"vec_id = {victim}") == 1
 
-    got = ann_store.search_segments(spark, [pa, pb], emb_q, k=3, nprobe=1)
+    got = ann_store.search([pa, pb], emb_q, k=3, nprobe=1)
     rows = got.collect()
     assert victim not in {int(r["neighbor_id"]) for r in rows}
     # slates stay full-length: true top-k among survivors, per query
@@ -584,9 +620,8 @@ def test_search_segments_mixed_bases_and_tombstones(spark, tmp_path):
 
     # hand-built expectation: union of per-segment slates, max-dedup,
     # re-ranked — exactly the documented merge
-    ia, ib = ann_store.load_ivfadc(pa), ann_store.load_ivfadc(pb)
-    union = ia.search_embeddings(emb_q, k=3, nprobe=1).unionByName(
-        ib.search_embeddings(emb_q, k=3, nprobe=1)
+    union = ann_store.search([pa], emb_q, k=3, nprobe=1).unionByName(
+        ann_store.search([pb], emb_q, k=3, nprobe=1)
     )
     best = union.groupBy("query_id", "neighbor_id").agg(
         F.max("cosine_adc").alias("cosine_adc")
@@ -627,10 +662,15 @@ def test_search_segments_refuses_mixed_geometry_and_empty(spark, tmp_path):
                                 residual=True, coarse_rows=stale),
         p8, stale, cb8, m=2, dim=8,
     )
-    with pytest.raises(ValueError, match="disagree on \\(m, dim\\)"):
-        ann_store.search_segments(spark, [p64, p8], emb8, k=2)
-    with pytest.raises(ValueError, match="at least one segment"):
-        ann_store.search_segments(spark, [], emb8, k=2)
+    for question in (ann_store.search, ann_store.range_search):
+        dial = {"k": 2} if question is ann_store.search else {
+            "threshold": 0.0}
+        with pytest.raises(ValueError, match="disagree on \\(m, dim\\)"):
+            question([p64, p8], emb8, **dial)
+        with pytest.raises(ValueError, match="at least one segment"):
+            question([], emb8, **dial)
+        with pytest.raises(TypeError, match="list of index directories"):
+            question(p64, emb8, **dial)
 
 
 def test_search_segments_overlap_dedups(spark, tmp_path):
@@ -644,15 +684,60 @@ def test_search_segments_overlap_dedups(spark, tmp_path):
                                 residual=True),
         p, coarse_rows, cb, m=4, dim=64,
     )
-    emb_q = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
-    got = sorted(map(tuple, ann_store.search_segments(
-        spark, [p, p], emb_q, k=3, nprobe=2
+    emb_q = _raw_queries(spark)
+    got = sorted(map(tuple, ann_store.search(
+        [p, p], emb_q, k=3, nprobe=2
     ).collect()))
-    want = sorted(map(tuple, ann_store.load_ivfadc(p)
-                      .search_embeddings(emb_q, k=3, nprobe=2).collect()))
+    want = sorted(map(tuple, ann_store.search(
+        [p], emb_q, k=3, nprobe=2
+    ).collect()))
     assert got == want
+
+
+def test_single_path_search_is_the_segment_slate(spark, tmp_path):
+    """One path is that index's own ivfadc_topk / ivfadc_range slate:
+    the same number of planned exchanges as the similarity-layer call
+    on the loaded artifact, with no merge aggregate; a second path adds
+    the max-dedup merge.  (Row parity with the similarity layer is
+    pinned by the rotated-artifact tests.)"""
+    emb = spark.createDataFrame(
+        [(i, [0.04 * i, -0.03 * i, 0.2, 0.01 * i]) for i in range(1, 13)],
+        "vec_id long, embedding array<float>",
+    )
+    prep = similarity.prepare(emb)
+    coarse_rows = [
+        (int(r["vec_id"]), [int(v) for v in r["q"]])
+        for r in prep.filter(F.col("vec_id") <= 2).collect()
+    ]
+    cb = similarity.pq_train_codebooks(
+        similarity.residualize(
+            similarity.ivf_assign_local(prep, coarse_rows), coarse_rows
+        ),
+        k=2, m=2, dim=4, iters=1,
+    )
+    path = str(tmp_path / "ix")
+    loaded = ann_store.save_ivfadc(
+        similarity.ivf_pq_index(prep, None, cb, m=2, dim=4, residual=True,
+                                coarse_rows=coarse_rows),
+        path, coarse_rows, cb, m=2, dim=4,
+    )
+    q = emb.filter(F.col("vec_id") >= 9)
+    model = (loaded.frame(spark), loaded.coarse_frame(spark), cb)
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    for got, want in (
+        (ann_store.search([path], q, k=3, nprobe=2),
+         similarity.ivfadc_topk(similarity.prepare(q), *model, k=3,
+                                nprobe=2, m=2, dim=4)),
+        (ann_store.range_search([path], q, -1.0, nprobe=2),
+         similarity.ivfadc_range(similarity.prepare(q), *model, -1.0,
+                                 nprobe=2, m=2, dim=4)),
+    ):
+        assert plan(got).count("Exchange") == plan(want).count("Exchange")
+        assert "max(cosine_adc" not in plan(got)
+    assert "max(cosine_adc" in plan(ann_store.search([path, path], q))
 
 
 def test_range_search_equals_thresholded_full_slate(spark, tmp_path):
@@ -670,9 +755,9 @@ def test_range_search_equals_thresholded_full_slate(spark, tmp_path):
                                 residual=True),
         path, coarse_rows, cb, m=4, dim=64,
     )
-    loaded = ann_store.load_ivfadc(path)
+    emb_q = _raw_queries(spark)
     tau = 0.2
-    got = loaded.range_search(queries, tau, nprobe=2)
+    got = ann_store.range_search([path], emb_q, tau, nprobe=2)
     # the candidate-side rank window is gone: the only Window left is
     # the probe-side query→list assignment (tiny query set), i.e. one
     # FEWER Window node than the same probe's top-k plan
@@ -680,13 +765,15 @@ def test_range_search_equals_thresholded_full_slate(spark, tmp_path):
         return df._jdf.queryExecution().executedPlan().toString().count(
             "Window"
         )
-    assert _windows(got) < _windows(loaded.search(queries, k=3, nprobe=2))
+    assert _windows(got) < _windows(
+        ann_store.search([path], emb_q, k=3, nprobe=2))
     got_rows = sorted(map(tuple, got.collect()))
     big_k = corpus.count()
     want = sorted(
         (int(r["query_id"]), int(r["neighbor_id"]),
          float(r["cosine_adc"]))
-        for r in loaded.search(queries, k=big_k, nprobe=2).collect()
+        for r in ann_store.search([path], emb_q, k=big_k,
+                                  nprobe=2).collect()
         if r["cosine_adc"] >= tau
     )
     assert got_rows == want and got_rows
@@ -696,27 +783,28 @@ def test_range_search_equals_thresholded_full_slate(spark, tmp_path):
     victim = got_rows[0][1]
     assert ann_store.delete_vectors(spark, path, f"vec_id = {victim}") == 1
     after = {int(r["neighbor_id"])
-             for r in loaded.range_search(queries, tau, nprobe=2).collect()}
+             for r in ann_store.range_search([path], emb_q, tau,
+                                             nprobe=2).collect()}
     assert victim not in after and after
 
     # hybrid dial composes; nothing-matches yields the typed empty
-    filt = loaded.range_search(queries, -1.0, nprobe=1,
-                               where="vec_id % 3 = 1")
+    filt = ann_store.range_search([path], emb_q, -1.0, nprobe=1,
+                                  where="vec_id % 3 = 1")
     assert all(int(r["neighbor_id"]) % 3 == 1 for r in filt.collect())
-    empty = loaded.range_search(queries, 0.0, nprobe=1, where="vec_id < 0",
-                                target_candidates=10)
+    empty = ann_store.range_search([path], emb_q, 0.0, nprobe=1,
+                                   where="vec_id < 0", target_candidates=10)
     assert empty.count() == 0
     assert empty.columns == ["query_id", "neighbor_id", "cosine_adc"]
 
 
 def test_range_search_segments_matches_thresholded_merge(spark, tmp_path):
-    """range_search_segments: the radius question over the frozen-base
-    + fresh-segment set.  Row-set equals search_segments with an
+    """Multi-path range_search: the radius question over the frozen-base
+    + fresh-segment set.  Row-set equals multi-path search with an
     unreachable k filtered to the threshold (per-segment thresholding
     commutes with the max-dedup), the degenerate same-path-twice case
     equals the single-index range search exactly (overlap dedups to
     the best score), tombstones suppress like every surface, and the
-    geometry/empty refusals match search_segments'."""
+    empty-path refusal matches search's."""
     coarse, queries, corpus, coarse_rows, cb = _trained_parts(spark)
     seg_a = corpus.filter(F.col("vec_id") % 2 == 0)
     seg_b = corpus.filter(F.col("vec_id") % 2 == 1)
@@ -730,21 +818,17 @@ def test_range_search_segments_matches_thresholded_merge(spark, tmp_path):
         )
         paths.append(p)
     pa, pb = paths
-    emb_q = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
+    emb_q = _raw_queries(spark)
 
     tau = 0.2
-    got = ann_store.range_search_segments(
-        spark, [pa, pb], emb_q, tau, nprobe=2
-    )
+    got = ann_store.range_search([pa, pb], emb_q, tau, nprobe=2)
     assert got.columns == ["query_id", "neighbor_id", "cosine_adc"]
     got_rows = sorted(map(tuple, got.collect()))
     big_k = corpus.count()
     want = sorted(
         (int(r["query_id"]), int(r["neighbor_id"]), float(r["cosine_adc"]))
-        for r in ann_store.search_segments(
-            spark, [pa, pb], emb_q, k=big_k, nprobe=2
+        for r in ann_store.search(
+            [pa, pb], emb_q, k=big_k, nprobe=2
         ).collect()
         if r["cosine_adc"] >= tau
     )
@@ -752,11 +836,11 @@ def test_range_search_segments_matches_thresholded_merge(spark, tmp_path):
 
     # overlap dedups: the same path twice is the degenerate re-admission
     # case and must equal the single-index range search exactly
-    single = sorted(map(tuple, ann_store.load_ivfadc(pa)
-                        .range_search_embeddings(emb_q, tau, nprobe=2)
-                        .collect()))
-    twice = sorted(map(tuple, ann_store.range_search_segments(
-        spark, [pa, pa], emb_q, tau, nprobe=2
+    single = sorted(map(tuple, ann_store.range_search(
+        [pa], emb_q, tau, nprobe=2
+    ).collect()))
+    twice = sorted(map(tuple, ann_store.range_search(
+        [pa, pa], emb_q, tau, nprobe=2
     ).collect()))
     assert twice == single
 
@@ -766,12 +850,12 @@ def test_range_search_segments_matches_thresholded_merge(spark, tmp_path):
     assert ann_store.delete_vectors(spark, seg_of,
                                     f"vec_id = {victim}") == 1
     after = {int(r["neighbor_id"])
-             for r in ann_store.range_search_segments(
-                 spark, [pa, pb], emb_q, tau, nprobe=2).collect()}
+             for r in ann_store.range_search(
+                 [pa, pb], emb_q, tau, nprobe=2).collect()}
     assert victim not in after and after
 
     with pytest.raises(ValueError, match="at least one segment"):
-        ann_store.range_search_segments(spark, [], emb_q, tau)
+        ann_store.range_search([], emb_q, tau)
 
 
 # ---------------------------------------------------------------------------
@@ -785,8 +869,8 @@ def test_merge_segments_carry_matches_search_segments(spark, tmp_path):
     per-segment tombstones resolve (the base's stale copy of a
     delete-then-reinsert id drops, the fresh copy wins), an id live in
     BOTH segments lands exactly once (later-wins), the merged store is
-    tombstone-free, and searching it is row-identical to
-    search_segments over the pre-merge set."""
+    tombstone-free, and searching it is row-identical to the
+    multi-path search over the pre-merge set."""
     coarse, queries, corpus, coarse_rows, cb = _trained_parts(spark)
     even = corpus.filter(F.col("vec_id") % 2 == 0)
     odd = corpus.filter(F.col("vec_id") % 2 == 1)
@@ -809,11 +893,9 @@ def test_merge_segments_carry_matches_search_segments(spark, tmp_path):
         fresh, coarse_rows, cb, m=4, dim=64,
     )
 
-    emb_q = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
-    want = sorted(map(tuple, ann_store.search_segments(
-        spark, [base, fresh], emb_q, k=3, nprobe=2
+    emb_q = _raw_queries(spark)
+    want = sorted(map(tuple, ann_store.search(
+        [base, fresh], emb_q, k=3, nprobe=2
     ).collect()))
 
     dest = str(tmp_path / "merged")
@@ -829,9 +911,8 @@ def test_merge_segments_carry_matches_search_segments(spark, tmp_path):
     assert ann_store.deleted_ids(spark, dest) is None
     table = merged.frame(spark)
     assert table.count() == table.select("vec_id").distinct().count()
-    got = sorted(map(tuple,
-                     merged.search_embeddings(emb_q, k=3,
-                                              nprobe=2).collect()))
+    got = sorted(map(tuple, ann_store.search(
+        [dest], emb_q, k=3, nprobe=2).collect()))
     assert got == want and got
 
 
@@ -1038,11 +1119,9 @@ def test_merge_segments_in_place_swap_and_dest_guard(spark, tmp_path):
                                 residual=True),
         fresh, coarse_rows, cb, m=4, dim=64,
     )
-    emb_q = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
-    want = sorted(map(tuple, ann_store.search_segments(
-        spark, [base, fresh], emb_q, k=3, nprobe=2
+    emb_q = _raw_queries(spark)
+    want = sorted(map(tuple, ann_store.search(
+        [base, fresh], emb_q, k=3, nprobe=2
     ).collect()))
 
     with pytest.raises(ValueError, match="non-base source"):
@@ -1052,8 +1131,8 @@ def test_merge_segments_in_place_swap_and_dest_guard(spark, tmp_path):
     assert rep["rows"] == corpus.count() - 1  # victim stays deleted
     assert ann_store.deleted_ids(spark, base) is None
     assert not os.path.isdir(os.path.join(base, ann_store.TOMBSTONE_DIR))
-    got = sorted(map(tuple, ann_store.load_ivfadc(base)
-                     .search_embeddings(emb_q, k=3, nprobe=2).collect()))
+    got = sorted(map(tuple, ann_store.search(
+        [base], emb_q, k=3, nprobe=2).collect()))
     assert got == want and got
 
 
@@ -1074,15 +1153,16 @@ def test_delete_vectors_search_parity_with_rebuilt_index(spark, tmp_path):
                                 residual=True),
         path, coarse_rows, cb, m=4, dim=64,
     )
-    loaded = ann_store.load_ivfadc(path)
-    base = loaded.search(queries, k=3, nprobe=2)
+    emb_q = _raw_queries(spark)
+    base = ann_store.search([path], emb_q, k=3, nprobe=2)
     victims = sorted({int(r["neighbor_id"])
                       for r in base.filter(F.col("rank") == 1).collect()})[:2]
     pred = f"vec_id IN ({victims[0]}, {victims[1]})"
     assert ann_store.delete_vectors(spark, path, pred) == 2
 
     got = sorted(map(tuple,
-                     loaded.search(queries, k=3, nprobe=2).collect()))
+                     ann_store.search([path], emb_q, k=3,
+                                      nprobe=2).collect()))
     assert not any(int(t[1]) in victims for t in got)
 
     # physical rebuild without the victims, same model
@@ -1093,8 +1173,8 @@ def test_delete_vectors_search_parity_with_rebuilt_index(spark, tmp_path):
                                 residual=True),
         path2, coarse_rows, cb, m=4, dim=64,
     )
-    want = sorted(map(tuple, ann_store.load_ivfadc(path2)
-                      .search(queries, k=3, nprobe=2).collect()))
+    want = sorted(map(tuple, ann_store.search(
+        [path2], emb_q, k=3, nprobe=2).collect()))
     assert got == want
 
     # idempotent re-delete: already-tombstoned ids are anti-joined out
@@ -1107,7 +1187,8 @@ def test_delete_vectors_search_parity_with_rebuilt_index(spark, tmp_path):
     )
     assert side.count() == side.distinct().count() == 2
     again = sorted(map(tuple,
-                       loaded.search(queries, k=3, nprobe=2).collect()))
+                       ann_store.search([path], emb_q, k=3,
+                                        nprobe=2).collect()))
     assert again == want
 
 
@@ -1122,8 +1203,9 @@ def test_compact_deleted_purges_rows_and_clears_tombstones(spark, tmp_path):
     n0 = spark.read.parquet(path).count()
     n_del = ann_store.delete_vectors(spark, path, "vec_id % 5 = 0")
     assert n_del > 0
-    before = sorted(map(tuple, ann_store.load_ivfadc(path)
-                        .search(queries, k=3, nprobe=2).collect()))
+    emb_q = _raw_queries(spark)
+    before = sorted(map(tuple, ann_store.search(
+        [path], emb_q, k=3, nprobe=2).collect()))
 
     rep = ann_store.compact_deleted(spark, path)
     assert rep == {"compacted": True, "purged": n_del, "kept": n0 - n_del}
@@ -1131,8 +1213,8 @@ def test_compact_deleted_purges_rows_and_clears_tombstones(spark, tmp_path):
     assert ann_store.deleted_ids(spark, path) is None
     assert not os.path.isdir(os.path.join(path, ann_store.TOMBSTONE_DIR))
     # search values identical before/after the physical purge
-    after = sorted(map(tuple, ann_store.load_ivfadc(path)
-                       .search(queries, k=3, nprobe=2).collect()))
+    after = sorted(map(tuple, ann_store.search(
+        [path], emb_q, k=3, nprobe=2).collect()))
     assert after == before
     # nothing left to purge → cheap no-op
     assert ann_store.compact_deleted(spark, path)["compacted"] is False
@@ -1229,22 +1311,19 @@ def test_adaptive_target_candidates_dial(spark, tmp_path):
         path, coarse_rows, cb, m=4, dim=64,
     )
     loaded = ann_store.load_ivfadc(path)
+    emb_q = _raw_queries(spark)
     pred = "vec_id % 3 = 1"
 
-    full = sorted(map(tuple, loaded.search(
-        queries, k=3, nprobe=4, where=pred
-    ).collect()))
-    big = sorted(map(tuple, loaded.search(
-        queries, k=3, nprobe=1, where=pred, target_candidates=10**9
-    ).collect()))
+    def run(**dials):
+        return sorted(map(tuple, ann_store.search(
+            [path], emb_q, k=3, **dials).collect()))
+
+    full = run(nprobe=4, where=pred)
+    big = run(nprobe=1, where=pred, target_candidates=10**9)
     assert big == full
 
-    floor = sorted(map(tuple, loaded.search(
-        queries, k=3, nprobe=1, where=pred, probe_matching_only=True
-    ).collect()))
-    tight = sorted(map(tuple, loaded.search(
-        queries, k=3, nprobe=1, where=pred, target_candidates=1
-    ).collect()))
+    floor = run(nprobe=1, where=pred, probe_matching_only=True)
+    tight = run(nprobe=1, where=pred, target_candidates=1)
     assert tight == floor
 
     # UNFILTERED (round 13), the dial is nprobe auto-tune over plain
@@ -1258,22 +1337,16 @@ def test_adaptive_target_candidates_dial(spark, tmp_path):
         for r in loaded.frame(spark).select("list_id").distinct().collect()
     }
     assert occupied == {lid for lid, _ in coarse_rows}
-    full_u = sorted(map(tuple, loaded.search(
-        queries, k=3, nprobe=len(coarse_rows)
-    ).collect()))
-    big_u = sorted(map(tuple, loaded.search(
-        queries, k=3, nprobe=1, target_candidates=10**9
-    ).collect()))
+    full_u = run(nprobe=len(coarse_rows))
+    big_u = run(nprobe=1, target_candidates=10**9)
     assert big_u == full_u
-    floor_u = sorted(map(tuple, loaded.search(queries, k=3,
-                                              nprobe=1).collect()))
-    tight_u = sorted(map(tuple, loaded.search(
-        queries, k=3, nprobe=1, target_candidates=1
-    ).collect()))
+    floor_u = run(nprobe=1)
+    tight_u = run(nprobe=1, target_candidates=1)
     assert tight_u == floor_u
 
-    empty = loaded.search(
-        queries, k=3, nprobe=1, where="vec_id < 0", target_candidates=10
+    empty = ann_store.search(
+        [path], emb_q, k=3, nprobe=1, where="vec_id < 0",
+        target_candidates=10,
     )
     assert empty.count() == 0
     assert empty.columns == ["query_id", "neighbor_id", "rank",
@@ -1286,7 +1359,7 @@ def test_full_lifecycle_rebalance_stream_admit_segment_search(
     """The COMPLETE production lifecycle, end to end: a streamed store
     drifts → rebalance sweeps it flat (the frozen base segment) →
     admission resumes into a FRESH directory (per the quiesced
-    contract) → `search_segments` reads base + fresh as one index and
+    contract) → `ann_store.search` reads base + fresh as one index and
     returns every vector, old and new, from raw queries — the exact
     workflow the rebalance docstring prescribes, now executable rather
     than prose."""
@@ -1353,18 +1426,14 @@ def test_full_lifecycle_rebalance_stream_admit_segment_search(
         [(100, [0.2, -0.15, 0.2, 0.05]), (101, [0.5, 0.9, -0.2, 0.7])],
         "vec_id long, embedding array<float>",
     )
-    got = ann_store.search_segments(
-        spark, [base_dir, fresh_dir], queries, k=4, nprobe=2
-    )
+    got = ann_store.search([base_dir, fresh_dir], queries, k=4, nprobe=2)
     rows_ = got.collect()
     seen = {int(r["neighbor_id"]) for r in rows_}
     # both generations are reachable through one search
     assert seen & set(range(1, 13)) and seen & set(range(20, 28))
     # and the merge equals the hand-built union of per-segment slates
-    ia, ib = (ann_store.load_ivfadc(base_dir),
-              ann_store.load_ivfadc(fresh_dir))
-    union = ia.search_embeddings(queries, k=4, nprobe=2).unionByName(
-        ib.search_embeddings(queries, k=4, nprobe=2)
+    union = ann_store.search([base_dir], queries, k=4, nprobe=2).unionByName(
+        ann_store.search([fresh_dir], queries, k=4, nprobe=2)
     )
     best = union.groupBy("query_id", "neighbor_id").agg(
         F.max("cosine_adc").alias("cosine_adc")
@@ -1389,9 +1458,7 @@ def test_full_lifecycle_rebalance_stream_admit_segment_search(
         spark, [base_dir, fresh_dir], merged_dir, raw_emb=emb_new
     )
     assert mrep["reencoded"] == 8 and mrep["rows"] == 20
-    one = ann_store.load_ivfadc(merged_dir).search_embeddings(
-        queries, k=4, nprobe=2
-    )
+    one = ann_store.search([merged_dir], queries, k=4, nprobe=2)
     seen_one = {int(r["neighbor_id"]) for r in one.collect()}
     assert seen_one & set(range(1, 13)) and seen_one & set(range(20, 28))
 
@@ -1399,7 +1466,7 @@ def test_full_lifecycle_rebalance_stream_admit_segment_search(
 def test_readmission_after_delete_via_fresh_segment(spark, tmp_path):
     """Delete-then-reinsert, the production sequence: a vec_id
     tombstoned in the frozen base and re-admitted into the FRESH
-    segment is found again by search_segments — the base's tombstone
+    segment is found again by the multi-path search — the base's tombstone
     suppresses only the base's (stale) copy, and the fresh segment's
     copy wins the merge.  This is why tombstones are per-store and
     re-insertion goes to a new directory, never back into the swept
@@ -1411,18 +1478,13 @@ def test_readmission_after_delete_via_fresh_segment(spark, tmp_path):
                                 residual=True),
         base_path, coarse_rows, cb, m=4, dim=64,
     )
-    loaded = ann_store.load_ivfadc(base_path)
-    victim = int(
-        loaded.search(queries, k=1, nprobe=2).first()["neighbor_id"]
-    )
+    emb_q = _raw_queries(spark)
+    victim = int(ann_store.search(
+        [base_path], emb_q, k=1, nprobe=2).first()["neighbor_id"])
     assert ann_store.delete_vectors(
         spark, base_path, f"vec_id = {victim}"
     ) == 1
-    emb_q = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
-    gone = ann_store.search_segments(spark, [base_path], emb_q, k=3,
-                                     nprobe=2)
+    gone = ann_store.search([base_path], emb_q, k=3, nprobe=2)
     assert victim not in {int(r["neighbor_id"]) for r in gone.collect()}
 
     # re-admit the same vector into a fresh segment (same model — the
@@ -1434,7 +1496,5 @@ def test_readmission_after_delete_via_fresh_segment(spark, tmp_path):
                                 residual=True),
         fresh_path, coarse_rows, cb, m=4, dim=64,
     )
-    back = ann_store.search_segments(
-        spark, [base_path, fresh_path], emb_q, k=3, nprobe=2
-    )
+    back = ann_store.search([base_path, fresh_path], emb_q, k=3, nprobe=2)
     assert victim in {int(r["neighbor_id"]) for r in back.collect()}

@@ -323,7 +323,8 @@ def test_rebalance_ivfadc_noop_trigger_and_repair(spark, tmp_path):
 
     loaded = ann_store.load_ivfadc(path)
     q = prep.filter(F.col("vec_id") < 6)
-    got = loaded.search(q, k=3, nprobe=rep["n_lists_after"])
+    got = ann_store.search([path], emb.filter(F.col("vec_id") < 6), k=3,
+                           nprobe=rep["n_lists_after"])
     dec = S.ivfadc_decode(
         loaded.frame(spark), loaded.coarse_rows, loaded.centroid_rows,
         m=2, dim=8,

@@ -14,6 +14,11 @@ from nr_rfc_dischargeobs_spark.extensions import text as textops
 from nr_rfc_dischargeobs_spark.plans.sqlfn import register_sql_tvfs
 
 
+def _raw_queries(emb_raw):
+    """The raw query rows the ``(12, 28, …)`` TVF calls select."""
+    return emb_raw.filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
+
+
 @pytest.fixture()
 def docs_view(spark):
     # lang/n_chars present because SQL UDF bodies are analyzed at CREATE
@@ -244,7 +249,6 @@ def test_tvf_ivfadc_search_matches_operator_on_saved_artifact(
     emb_raw.createOrReplaceTempView("embeddings")
     prep = similarity.prepare(emb_raw)
     coarse = prep.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 12))
-    queries = prep.filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
     corpus = prep.filter(F.col("vec_id") >= 28)
     coarse_rows = [
         (int(r["vec_id"]), [int(v) for v in r["q"]])
@@ -255,11 +259,11 @@ def test_tvf_ivfadc_search_matches_operator_on_saved_artifact(
     )
     cb = similarity.pq_train_codebooks(residuals, k=8, m=4, dim=64, iters=1)
     path = str(tmp_path / "ivfadc_artifact")
-    handle = ann_store.save_ivfadc(
+    ann_store.save_ivfadc(
         similarity.ivf_pq_index(corpus, coarse, cb, residual=True),
         path, coarse_rows, cb, m=4, dim=64,
     )
-    want = handle.search(queries, k=3, nprobe=2)
+    want = ann_store.search([path], _raw_queries(emb_raw), k=3, nprobe=2)
     assert register_ivfadc_search_tvf(spark, path) == "tvf_ivfadc_search"
     got = spark.sql("SELECT * FROM tvf_ivfadc_search(12, 28, 3, 2)")
     # bitwise parity: the TVF's reconstruction dot sums the same exact
@@ -287,8 +291,8 @@ def test_tvf_ivfadc_search_filtered_and_rotated(spark, tmp_path):
     registration pre-filters the store view — SQL results equal
     ivfadc_topk(where=…) exactly; (2) a post_int-rotated artifact
     registers transparently (the rotation view rotates query vectors in
-    exact BIGINTs) and matches search_embeddings; (3) a float ('pre')
-    rotation refuses loudly."""
+    exact BIGINTs) and matches ann_store.search; (3) a float ('pre')
+    rotation matches it too."""
     import pytest as _pytest
 
     from nr_rfc_dischargeobs_spark.extensions import ann_store, similarity
@@ -302,9 +306,7 @@ def test_tvf_ivfadc_search_filtered_and_rotated(spark, tmp_path):
     rot = {"mode": "post_int", "components": h}
     basis = ann_store.apply_rotation(emb_raw, rot)
     coarse = basis.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 12))
-    queries_raw = emb_raw.filter(
-        (F.col("vec_id") >= 12) & (F.col("vec_id") < 28)
-    )
+    queries_raw = _raw_queries(emb_raw)
     corpus = basis.filter(F.col("vec_id") >= 28)
     coarse_rows = [
         (int(r["vec_id"]), [int(v) for v in r["q"]])
@@ -317,22 +319,22 @@ def test_tvf_ivfadc_search_filtered_and_rotated(spark, tmp_path):
         k=8, m=4, dim=64, iters=1,
     )
     path = str(tmp_path / "rot_artifact")
-    handle = ann_store.save_ivfadc(
+    ann_store.save_ivfadc(
         similarity.ivf_pq_index(corpus, coarse, cb, residual=True),
         path, coarse_rows, cb, m=4, dim=64, rotation=rot,
     )
 
-    # rotated, unfiltered: TVF == search_embeddings bit-for-bit
+    # rotated, unfiltered: TVF == ann_store.search bit-for-bit
     register_ivfadc_search_tvf(spark, path)
     got = spark.sql("SELECT * FROM tvf_ivfadc_search(12, 28, 3, 2)")
-    want = handle.search_embeddings(queries_raw, k=3, nprobe=2)
+    want = ann_store.search([path], queries_raw, k=3, nprobe=2)
     assert rows(got) == rows(want)
 
     # rotated + filtered: predicate in the store view == where= dial
     register_ivfadc_search_tvf(spark, path, where="vec_id % 3 = 1")
     got_f = spark.sql("SELECT * FROM tvf_ivfadc_search(12, 28, 3, 2)")
-    want_f = handle.search_embeddings(
-        queries_raw, k=3, nprobe=2, where="vec_id % 3 = 1"
+    want_f = ann_store.search(
+        [path], queries_raw, k=3, nprobe=2, where="vec_id % 3 = 1"
     )
     assert rows(got_f) == rows(want_f)
     assert all(r["neighbor_id"] % 3 == 1 for r in got_f.collect())
@@ -340,7 +342,7 @@ def test_tvf_ivfadc_search_filtered_and_rotated(spark, tmp_path):
     # float ("pre") rotations: since round 12 the TVF folds the trained
     # matrix in as literal arrays applied with pca_project's exact
     # deterministic fold — registration succeeds and parity with
-    # search_embeddings is bit-identical (the GROUP BY addition-order
+    # ann_store.search is bit-identical (the GROUP BY addition-order
     # hazard is what the fold spelling avoids)
     pre_path = str(tmp_path / "pre_artifact")
     pre = {
@@ -364,7 +366,7 @@ def test_tvf_ivfadc_search_filtered_and_rotated(spark, tmp_path):
         ),
         k=8, m=4, dim=64, iters=0,
     )
-    pre_handle = ann_store.save_ivfadc(
+    ann_store.save_ivfadc(
         similarity.ivf_pq_index(
             corpus_pre, coarse_pre, cb_pre, residual=True
         ),
@@ -372,14 +374,14 @@ def test_tvf_ivfadc_search_filtered_and_rotated(spark, tmp_path):
     )
     register_ivfadc_search_tvf(spark, pre_path)
     got_pre = spark.sql("SELECT * FROM tvf_ivfadc_search(12, 28, 3, 2)")
-    want_pre = pre_handle.search_embeddings(queries_raw, k=3, nprobe=2)
+    want_pre = ann_store.search([pre_path], queries_raw, k=3, nprobe=2)
     assert rows(got_pre) == rows(want_pre)
 
 
 def test_tvf_ivfadc_search_applies_tombstones(spark, tmp_path):
     """Operator ≡ TVF parity extends to deletions: a tombstoned vec_id
     (ann_store.delete_vectors) is excluded from the TVF's candidate
-    set exactly as IvfadcIndex.search anti-joins it."""
+    set exactly as ann_store.search anti-joins it."""
     from nr_rfc_dischargeobs_spark.extensions import ann_store, similarity
     from nr_rfc_dischargeobs_spark.plans.sqlfn import (
         register_ivfadc_search_tvf,
@@ -389,7 +391,6 @@ def test_tvf_ivfadc_search_applies_tombstones(spark, tmp_path):
     emb_raw.createOrReplaceTempView("embeddings")
     prep = similarity.prepare(emb_raw)
     coarse = prep.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 12))
-    queries = prep.filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
     corpus = prep.filter(F.col("vec_id") >= 28)
     coarse_rows = [
         (int(r["vec_id"]), [int(v) for v in r["q"]])
@@ -402,18 +403,18 @@ def test_tvf_ivfadc_search_applies_tombstones(spark, tmp_path):
         k=8, m=4, dim=64, iters=1,
     )
     path = str(tmp_path / "tomb_artifact")
-    handle = ann_store.save_ivfadc(
+    ann_store.save_ivfadc(
         similarity.ivf_pq_index(corpus, coarse, cb, residual=True),
         path, coarse_rows, cb, m=4, dim=64,
     )
-    victim = int(
-        handle.search(queries, k=1, nprobe=2).first()["neighbor_id"]
-    )
+    queries_raw = _raw_queries(emb_raw)
+    victim = int(ann_store.search(
+        [path], queries_raw, k=1, nprobe=2).first()["neighbor_id"])
     assert ann_store.delete_vectors(spark, path, f"vec_id = {victim}") == 1
 
     register_ivfadc_search_tvf(spark, path)
     got = spark.sql("SELECT * FROM tvf_ivfadc_search(12, 28, 3, 2)")
-    want = ann_store.load_ivfadc(path).search(queries, k=3, nprobe=2)
+    want = ann_store.search([path], queries_raw, k=3, nprobe=2)
     assert rows(got) == rows(want)
     assert victim not in {r["neighbor_id"] for r in got.collect()}
 
@@ -434,7 +435,6 @@ def test_tvf_ivfadc_search_adaptive_target(spark, tmp_path):
     emb_raw.createOrReplaceTempView("embeddings")
     prep = similarity.prepare(emb_raw)
     coarse = prep.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 12))
-    queries = prep.filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
     corpus = prep.filter(F.col("vec_id") >= 28)
     coarse_rows = [
         (int(r["vec_id"]), [int(v) for v in r["q"]])
@@ -447,7 +447,7 @@ def test_tvf_ivfadc_search_adaptive_target(spark, tmp_path):
         k=8, m=4, dim=64, iters=1,
     )
     path = str(tmp_path / "adaptive_artifact")
-    handle = ann_store.save_ivfadc(
+    ann_store.save_ivfadc(
         similarity.ivf_pq_index(corpus, coarse, cb, residual=True),
         path, coarse_rows, cb, m=4, dim=64,
     )
@@ -456,8 +456,9 @@ def test_tvf_ivfadc_search_adaptive_target(spark, tmp_path):
         spark, path, where=pred, target_candidates=60
     )
     got = spark.sql("SELECT * FROM tvf_ivfadc_search(12, 28, 3, 1)")
-    want = handle.search(
-        queries, k=3, nprobe=1, where=pred, target_candidates=60
+    queries_raw = _raw_queries(emb_raw)
+    want = ann_store.search(
+        [path], queries_raw, k=3, nprobe=1, where=pred, target_candidates=60
     )
     assert rows(got) == rows(want) and len(rows(got)) > 0
 
@@ -465,7 +466,9 @@ def test_tvf_ivfadc_search_adaptive_target(spark, tmp_path):
     # sizes, TVF == operator bit-for-bit
     register_ivfadc_search_tvf(spark, path, target_candidates=60)
     got_u = spark.sql("SELECT * FROM tvf_ivfadc_search(12, 28, 3, 1)")
-    want_u = handle.search(queries, k=3, nprobe=1, target_candidates=60)
+    want_u = ann_store.search(
+        [path], queries_raw, k=3, nprobe=1, target_candidates=60
+    )
     assert rows(got_u) == rows(want_u) and len(rows(got_u)) > 0
 
     # probe_matching_only without the budget walk: the coarse view is
@@ -474,8 +477,9 @@ def test_tvf_ivfadc_search_adaptive_target(spark, tmp_path):
         spark, path, where=pred, probe_matching_only=True
     )
     got_m = spark.sql("SELECT * FROM tvf_ivfadc_search(12, 28, 3, 1)")
-    want_m = handle.search(
-        queries, k=3, nprobe=1, where=pred, probe_matching_only=True
+    want_m = ann_store.search(
+        [path], queries_raw, k=3, nprobe=1, where=pred,
+        probe_matching_only=True,
     )
     assert rows(got_m) == rows(want_m) and len(rows(got_m)) > 0
 
@@ -498,7 +502,6 @@ def test_tvf_ivfadc_range_matches_operator(spark, tmp_path):
     emb_raw.createOrReplaceTempView("embeddings")
     prep = similarity.prepare(emb_raw)
     coarse = prep.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 12))
-    queries = prep.filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
     corpus = prep.filter(F.col("vec_id") >= 28)
     coarse_rows = [
         (int(r["vec_id"]), [int(v) for v in r["q"]])
@@ -511,16 +514,17 @@ def test_tvf_ivfadc_range_matches_operator(spark, tmp_path):
         k=8, m=4, dim=64, iters=1,
     )
     path = str(tmp_path / "range_artifact")
-    handle = ann_store.save_ivfadc(
+    ann_store.save_ivfadc(
         similarity.ivf_pq_index(corpus, coarse, cb, residual=True),
         path, coarse_rows, cb, m=4, dim=64,
     )
+    queries_raw = _raw_queries(emb_raw)
     assert register_ivfadc_range_tvf(spark, path) == "tvf_ivfadc_range"
     for tau in (0.2, -1.0):
         got = spark.sql(
             f"SELECT * FROM tvf_ivfadc_range(12, 28, {tau}, 2)"
         )
-        want = handle.range_search(queries, tau, nprobe=2)
+        want = ann_store.range_search([path], queries_raw, tau, nprobe=2)
         assert rows(got) == rows(want) and len(rows(got)) > 0
 
     # tombstones snapshot at registration, exactly like the search TVF
@@ -531,13 +535,14 @@ def test_tvf_ivfadc_range_matches_operator(spark, tmp_path):
     register_ivfadc_range_tvf(spark, path)  # re-register → sees them
     got_d = spark.sql("SELECT * FROM tvf_ivfadc_range(12, 28, -1.0, 2)")
     assert victim not in {int(r["neighbor_id"]) for r in got_d.collect()}
-    assert rows(got_d) == rows(handle.range_search(queries, -1.0, nprobe=2))
+    assert rows(got_d) == rows(
+        ann_store.range_search([path], queries_raw, -1.0, nprobe=2))
 
     # the filtered dial binds at registration and composes
     register_ivfadc_range_tvf(spark, path, where="vec_id % 3 = 1")
     got_f = spark.sql("SELECT * FROM tvf_ivfadc_range(12, 28, -1.0, 2)")
-    want_f = handle.range_search(queries, -1.0, nprobe=2,
-                                 where="vec_id % 3 = 1")
+    want_f = ann_store.range_search([path], queries_raw, -1.0, nprobe=2,
+                                    where="vec_id % 3 = 1")
     assert rows(got_f) == rows(want_f) and len(rows(got_f)) > 0
 
 
@@ -545,7 +550,7 @@ def test_tvf_ivfadc_segments_matches_operator(spark, tmp_path):
     """Multi-segment search from pure SQL: two segments with different
     models and different bases (raw + Hadamard post_int), one with a
     tombstone, searched through tvf_ivfadc_segments_search — rows
-    identical to ann_store.search_segments on the same stores, with
+    identical to the multi-path ann_store.search on the same stores, with
     and without the where dial; mixed geometry refuses."""
     import pytest as _pytest
 
@@ -587,10 +592,10 @@ def test_tvf_ivfadc_segments_matches_operator(spark, tmp_path):
                rotation={"mode": "post_int", "components": had})
     assert ann_store.delete_vectors(spark, pa, "vec_id = 30") == 1
 
-    emb_q = emb_raw.filter((F.col("vec_id") >= 12) & (F.col("vec_id") < 28))
+    emb_q = _raw_queries(emb_raw)
     register_ivfadc_segments_tvf(spark, [pa, pb])
     got = spark.sql("SELECT * FROM tvf_ivfadc_segments_search(12, 28, 3, 1)")
-    want = ann_store.search_segments(spark, [pa, pb], emb_q, k=3, nprobe=1)
+    want = ann_store.search([pa, pb], emb_q, k=3, nprobe=1)
     assert rows(got) == rows(want) and len(rows(got)) > 0
 
     # the range twin rides the same registration (round 13): operator
@@ -599,17 +604,15 @@ def test_tvf_ivfadc_segments_matches_operator(spark, tmp_path):
     got_r = spark.sql(
         "SELECT * FROM tvf_ivfadc_segments_range(12, 28, 0.2, 1)"
     )
-    want_r = ann_store.range_search_segments(
-        spark, [pa, pb], emb_q, 0.2, nprobe=1
-    )
+    want_r = ann_store.range_search([pa, pb], emb_q, 0.2, nprobe=1)
     assert rows(got_r) == rows(want_r) and len(rows(got_r)) > 0
 
     register_ivfadc_segments_tvf(spark, [pa, pb], where="vec_id % 3 = 1")
     got_f = spark.sql(
         "SELECT * FROM tvf_ivfadc_segments_search(12, 28, 3, 1)"
     )
-    want_f = ann_store.search_segments(
-        spark, [pa, pb], emb_q, k=3, nprobe=1, where="vec_id % 3 = 1"
+    want_f = ann_store.search(
+        [pa, pb], emb_q, k=3, nprobe=1, where="vec_id % 3 = 1"
     )
     assert rows(got_f) == rows(want_f)
 
@@ -622,8 +625,8 @@ def test_tvf_ivfadc_segments_matches_operator(spark, tmp_path):
     got_b = spark.sql(
         "SELECT * FROM tvf_ivfadc_segments_search(12, 28, 3, 1)"
     )
-    want_b = ann_store.search_segments(
-        spark, [pa, pb], emb_q, k=3, nprobe=1, where="vec_id % 3 = 1",
+    want_b = ann_store.search(
+        [pa, pb], emb_q, k=3, nprobe=1, where="vec_id % 3 = 1",
         target_candidates=5,
     )
     assert rows(got_b) == rows(want_b) and len(rows(got_b)) > 0
@@ -635,8 +638,8 @@ def test_tvf_ivfadc_segments_matches_operator(spark, tmp_path):
     got_m = spark.sql(
         "SELECT * FROM tvf_ivfadc_segments_search(12, 28, 3, 1)"
     )
-    want_m = ann_store.search_segments(
-        spark, [pa, pb], emb_q, k=3, nprobe=1, where="vec_id % 3 = 1",
+    want_m = ann_store.search(
+        [pa, pb], emb_q, k=3, nprobe=1, where="vec_id % 3 = 1",
         probe_matching_only=True,
     )
     assert rows(got_m) == rows(want_m) and len(rows(got_m)) > 0
@@ -646,8 +649,8 @@ def test_tvf_ivfadc_segments_matches_operator(spark, tmp_path):
     got_u = spark.sql(
         "SELECT * FROM tvf_ivfadc_segments_search(12, 28, 3, 1)"
     )
-    want_u = ann_store.search_segments(
-        spark, [pa, pb], emb_q, k=3, nprobe=1, target_candidates=8
+    want_u = ann_store.search(
+        [pa, pb], emb_q, k=3, nprobe=1, target_candidates=8
     )
     assert rows(got_u) == rows(want_u) and len(rows(got_u)) > 0
 
@@ -656,8 +659,8 @@ def test_tvf_ivfadc_segments_matches_operator(spark, tmp_path):
     got_ur = spark.sql(
         "SELECT * FROM tvf_ivfadc_segments_range(12, 28, -1.0, 1)"
     )
-    want_ur = ann_store.range_search_segments(
-        spark, [pa, pb], emb_q, -1.0, nprobe=1, target_candidates=8
+    want_ur = ann_store.range_search(
+        [pa, pb], emb_q, -1.0, nprobe=1, target_candidates=8
     )
     assert rows(got_ur) == rows(want_ur) and len(rows(got_ur)) > 0
 

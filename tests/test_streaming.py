@@ -1432,10 +1432,9 @@ def test_tombstone_stream_deletes_flow_to_search(spark, tmp_path):
         stream, path, str(tmp_path / "ckpt")
     ).awaitTermination(120)
 
-    loaded = ann_store.load_ivfadc(path)
-    q = prep.filter(F.col("vec_id") <= 2)
+    q = emb.filter(F.col("vec_id") <= 2)
     got = {int(r["neighbor_id"])
-           for r in loaded.search(q, k=12, nprobe=2).collect()}
+           for r in ann_store.search([path], q, k=12, nprobe=2).collect()}
     assert not got & {3, 7} and got  # deleted gone, survivors rank
 
     # overlapping second drop (re-delete 7, add 9) — set semantics
@@ -1449,7 +1448,7 @@ def test_tombstone_stream_deletes_flow_to_search(spark, tmp_path):
     # batch deletes compose into the same table
     assert ann_store.delete_vectors(spark, path, "vec_id = 11") == 1
     got2 = {int(r["neighbor_id"])
-            for r in loaded.search(q, k=12, nprobe=2).collect()}
+            for r in ann_store.search([path], q, k=12, nprobe=2).collect()}
     assert not got2 & {3, 7, 9, 11}
     # physical purge clears everything at once
     rep = ann_store.compact_deleted(spark, path)

@@ -843,10 +843,11 @@ def r11_tier(spark, t: dict, n: int) -> None:
         exact10.count()
 
         def _recall(label):
-            loaded = ann_store.load_ivfadc(path)
+            # synth rows depend on vec_id alone: these are prep's < 256
             row = similarity.ann_recall(
-                loaded.search(
-                    prep.filter(F.col("vec_id") < 256), k=10, nprobe=nprobe
+                ann_store.search(
+                    [path], synth_clustered_embs(spark, 256), k=10,
+                    nprobe=nprobe,
                 ),
                 exact10,
             ).agg(F.avg("recall").alias("r")).collect()[0]
@@ -897,7 +898,7 @@ def r12_tier(spark, t: dict, n: int) -> None:
        a 10 %-of-n fresh admission segment with its OWN coarse
        quantizer (fewer lists — admission segments are smaller) and
        OWN codebook, searched as one via
-       ``ann_store.search_segments``; recall@10 vs exact ground truth
+       multi-path ``ann_store.search``; recall@10 vs exact ground truth
        over the FULL corpus, anchored by one combined index trained on
        everything.  Then 1 % of the base is tombstoned
        (``delete_vectors``) and the merged search re-measured against
@@ -985,9 +986,7 @@ def r12_tier(spark, t: dict, n: int) -> None:
 
         t0 = time.time()
         seg_row = similarity.ann_recall(
-            ann_store.search_segments(
-                spark, [base_path, fresh_path], q_raw, k=10, nprobe=8
-            ),
+            ann_store.search([base_path, fresh_path], q_raw, k=10, nprobe=8),
             exact10,
         ).agg(F.avg("recall").alias("r")).collect()[0]
         t["seg_search_recall10_np8"] = {
@@ -996,9 +995,7 @@ def r12_tier(spark, t: dict, n: int) -> None:
         }
         t0 = time.time()
         combo_row = similarity.ann_recall(
-            ann_store.load_ivfadc(combo_path).search_embeddings(
-                q_raw, k=10, nprobe=8
-            ),
+            ann_store.search([combo_path], q_raw, k=10, nprobe=8),
             exact10,
         ).agg(F.avg("recall").alias("r")).collect()[0]
         t["seg_combined_recall10_np8"] = {
@@ -1028,9 +1025,7 @@ def r12_tier(spark, t: dict, n: int) -> None:
         exact_surv.count()
         t0 = time.time()
         del_row = similarity.ann_recall(
-            ann_store.search_segments(
-                spark, [base_path, fresh_path], q_raw, k=10, nprobe=8
-            ),
+            ann_store.search([base_path, fresh_path], q_raw, k=10, nprobe=8),
             exact_surv,
         ).agg(F.avg("recall").alias("r")).collect()[0]
         t["seg_search_tombstoned_recall10_np8"] = {
@@ -1277,8 +1272,8 @@ def r13_tier(spark, t: dict, n: int) -> None:
         # 5: the pre-merge steady state — two segments per search
         r_seg = _stage(
             "lc_segment_search_np8",
-            lambda: _recall(ann_store.search_segments(
-                spark, [base_path, fresh_path], q_raw, k=10, nprobe=8
+            lambda: _recall(ann_store.search(
+                [base_path, fresh_path], q_raw, k=10, nprobe=8
             )),
         )
         t["lc_segment_search_np8"]["mean_recall_at_10"] = r_seg
@@ -1296,19 +1291,18 @@ def r13_tier(spark, t: dict, n: int) -> None:
             dropped_deleted=mrep["dropped_deleted"],
         )
         # 7: post-merge — ONE path, single-index cost again
-        merged = ann_store.load_ivfadc(merged_path)
         r_m = _stage(
             "lc_merged_search_np8",
-            lambda: _recall(merged.search_embeddings(q_raw, k=10,
-                                                     nprobe=8)),
+            lambda: _recall(ann_store.search([merged_path], q_raw, k=10,
+                                             nprobe=8)),
         )
         t["lc_merged_search_np8"]["mean_recall_at_10"] = r_m
 
         # --- unfiltered candidate-budget curve on the merged store ---
         anchor = _stage(
             "lc_budget_anchor_np8",
-            lambda: _recall(merged.search_embeddings(q_raw, k=10,
-                                                     nprobe=8)),
+            lambda: _recall(ann_store.search([merged_path], q_raw, k=10,
+                                             nprobe=8)),
         )
         t["lc_budget_anchor_np8"]["mean_recall_at_10"] = anchor
         # at 1M/64 lists (~15.6k/list) the three targets land below, at,
@@ -1317,8 +1311,9 @@ def r13_tier(spark, t: dict, n: int) -> None:
         for target in (16_000, 64_000, 256_000):
             r_b = _stage(
                 f"lc_budget_target_{target // 1000}k",
-                lambda target=target: _recall(merged.search_embeddings(
-                    q_raw, k=10, nprobe=1, target_candidates=target
+                lambda target=target: _recall(ann_store.search(
+                    [merged_path], q_raw, k=10, nprobe=1,
+                    target_candidates=target,
                 )),
             )
             t[f"lc_budget_target_{target // 1000}k"].update(
@@ -1355,6 +1350,8 @@ def r13_budget_tier(spark, t: dict, n: int) -> None:
         held.append(prep)
         prep.count()
         q_raw_prep = prep.filter(F.col("vec_id") < 256)
+        # synth rows depend on vec_id alone: these are q_raw_prep's raws
+        q_raw = synth_random_embs(spark, 256)
         corpus = prep.filter(F.col("vec_id") >= 256)
         sample = corpus.filter(
             F.pmod(F.xxhash64("vec_id"), F.lit(20)) == 0
@@ -1395,7 +1392,7 @@ def r13_budget_tier(spark, t: dict, n: int) -> None:
         def _run(key, **kw):
             t0 = time.time()
             r = round(similarity.ann_recall(
-                ix.search(q_raw_prep, k=10, **kw), exact10
+                ann_store.search([ix.path], q_raw, k=10, **kw), exact10
             ).agg(F.avg("recall").alias("r")).collect()[0].r, 4)
             t[key] = {"sec": round(time.time() - t0, 1),
                       "mean_recall_at_10": r, **kw}
@@ -1426,7 +1423,7 @@ def r13_range_tier(spark, t: dict, n: int) -> None:
     probed scan as a range query: the sort exchange is gone, so the
     range pass should land at-or-below the top-k pass while returning
     MORE rows.  Second half: the same radius through
-    ``range_search_segments`` on the base + fresh two-segment posture
+    multi-path ``ann_store.range_search`` on the base + fresh two-segment posture
     (per-segment threshold, max-dedup merge, still no rank window)."""
     import shutil
     import tempfile
@@ -1472,7 +1469,6 @@ def r13_range_tier(spark, t: dict, n: int) -> None:
         held.append(prep)
         prep.count()
         q_raw = emb.filter(F.col("vec_id") < 256)
-        q_prep = prep.filter(F.col("vec_id") < 256)
         base_part = prep.filter(
             (F.col("vec_id") >= 256) & (F.col("vec_id") < n)
         )
@@ -1487,11 +1483,9 @@ def r13_range_tier(spark, t: dict, n: int) -> None:
         }
         print(f"  {t['rng_base_build']['sec']:7.1f} s  rng_base_build",
               file=sys.stderr)
-        ix = ann_store.load_ivfadc(base_path)
-
         # top-k anchor: the rank-window plan this tier compares against
         t0 = time.time()
-        anchor = ix.search(q_prep, k=10, nprobe=8)
+        anchor = ann_store.search([base_path], q_raw, k=10, nprobe=8)
         n_anchor = force(anchor)
         t["rng_topk10_np8"] = {
             "sec": round(time.time() - t0, 1), "rows": n_anchor,
@@ -1510,7 +1504,8 @@ def r13_range_tier(spark, t: dict, n: int) -> None:
         tau = round(tenth[len(tenth) // 2], 4) if tenth else 0.5
 
         t0 = time.time()
-        n_rng = force(ix.range_search(q_prep, tau, nprobe=8))
+        n_rng = force(ann_store.range_search([base_path], q_raw, tau,
+                                             nprobe=8))
         t["rng_range_np8"] = {
             "sec": round(time.time() - t0, 1), "rows": n_rng, "tau": tau,
         }
@@ -1527,8 +1522,8 @@ def r13_range_tier(spark, t: dict, n: int) -> None:
         print(f"  {t['rng_fresh_build']['sec']:7.1f} s  rng_fresh_build",
               file=sys.stderr)
         t0 = time.time()
-        n_seg = force(ann_store.range_search_segments(
-            spark, [base_path, fresh_path], q_raw, tau, nprobe=8
+        n_seg = force(ann_store.range_search(
+            [base_path, fresh_path], q_raw, tau, nprobe=8
         ))
         t["rng_seg_range_np8"] = {
             "sec": round(time.time() - t0, 1), "rows": n_seg, "tau": tau,
